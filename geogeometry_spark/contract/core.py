@@ -398,17 +398,17 @@ def q_s2_pip_join_big(spark, sf_dir):
 def q_s2_pip_semi(spark, sf_dir):
     """One-pass broadcast semi join on the S2 index (same grouped-cell
     shape as the geohash pip_semi; shares its oracle)."""
-    from ..operators.s2_join import s2_pip_semi_anti
+    from ..operators.s2_join import s2_pip_join
 
     df = _docs_coords(spark, sf_dir)
-    return s2_pip_semi_anti(df, how="left_semi").select("doc_id", "lat", "lon")
+    return s2_pip_join(df, how="left_semi").select("doc_id", "lat", "lon")
 
 
 def q_s2_pip_anti(spark, sf_dir):
-    from ..operators.s2_join import s2_pip_semi_anti
+    from ..operators.s2_join import s2_pip_join
 
     df = _docs_coords(spark, sf_dir)
-    return s2_pip_semi_anti(df, how="left_anti").select("doc_id", "lat", "lon")
+    return s2_pip_join(df, how="left_anti").select("doc_id", "lat", "lon")
 
 
 def q_s2_knn(spark, sf_dir):

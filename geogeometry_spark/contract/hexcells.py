@@ -296,18 +296,18 @@ def q_hex_pip_semi(spark, sf_dir):
     """One-pass semi PIP through the hex index (grouped broadcast cell
     relation, no duplicate risk); shares the semi oracle with the
     geohash and S2 paths."""
-    from ..operators.hex_join import hex_pip_semi_anti
+    from ..operators.hex_join import hex_pip_join
 
     df = _docs_coords(spark, sf_dir)
-    return hex_pip_semi_anti(df, "left_semi").select("doc_id", "lat", "lon")
+    return hex_pip_join(df, how="left_semi").select("doc_id", "lat", "lon")
 
 
 def q_hex_pip_anti(spark, sf_dir):
     """Anti twin of q_hex_pip_semi (set-ops family on the hex index)."""
-    from ..operators.hex_join import hex_pip_semi_anti
+    from ..operators.hex_join import hex_pip_join
 
     df = _docs_coords(spark, sf_dir)
-    return hex_pip_semi_anti(df, "left_anti").select("doc_id", "lat", "lon")
+    return hex_pip_join(df, how="left_anti").select("doc_id", "lat", "lon")
 
 
 def q_hex_heatmap(spark, sf_dir):

@@ -29,22 +29,34 @@ chosen so the WORST query latitude still fits ``max_k`` rings.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import columns as C
 from ..functions import hexcell as HX
-from ..kernels import geometry as kgeo
 from ..kernels import hexgrid as hg
+from .cell_join import (
+    broadcast_pip,
+    candidate_join,
+    default_cover,
+    knn_rounds,
+    top_k,
+    within_radius,
+)
+
+#: ring count per query the auto-res bands of hex_radius_join_bulk aim at
+_BAND_TARGET_K = 6
+#: per-polygon candidate-grid cap bounding hex_pip_join's auto res
+_COVER_MAX_CELLS = 2048
 
 
-def _points_with_cell(
-    points: DataFrame, lat_col: str, lon_col: str, res: int, cell_col: str | None
-) -> tuple[DataFrame, F.Column]:
-    """Points keyed by hex cell: reuse an EXPLICIT precomputed column
-    (caller names it — no auto-detection, per the s2_join s2_30 advice)
-    or compute via the Arrow kernel UDF.
+def _hex_key(
+    lat_col: str, lon_col: str, res: int, cell_col: str | None
+) -> F.Column:
+    """Probe-side hex cell key: an EXPLICIT precomputed column (caller
+    names it — no auto-detection, a stale or foreign column would
+    silently mis-join) or the Arrow kernel UDF.
 
     The UDF, not the native Column, on purpose: under a join the
     optimizer inlines the native encode into the join-side Project
@@ -54,10 +66,10 @@ def _points_with_cell(
     attribute so the join stage stays lean (the s2_cell_udf
     precedent; see functions/udfs.py hex_cell_udf)."""
     if cell_col is not None:
-        return points, F.col(cell_col)
+        return F.col(cell_col)
     from ..functions.udfs import hex_cell_udf
 
-    return points, hex_cell_udf(res)(F.col(lat_col), F.col(lon_col))
+    return hex_cell_udf(res)(F.col(lat_col), F.col(lon_col))
 
 
 def _require_res_with_cell_col(res, cell_col) -> None:
@@ -96,14 +108,10 @@ def hex_radius_join(
     k = hg.k_for_radius(center_lat, radius_m, res)
     center_cell = hg.encode_cell_scalar(center_lat, center_lon, res)
     disk = hg.grid_disk(center_cell, k)
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.lit(center_lat), F.lit(center_lon)
-    )
-    return (
-        pts.where(cell.isin(disk))
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= F.lit(radius_m))
+    cell = _hex_key(lat_col, lon_col, res, cell_col)
+    return within_radius(
+        points.where(cell.isin(disk)),
+        center_lat, center_lon, radius_m, lat_col, lon_col,
     )
 
 
@@ -140,18 +148,17 @@ def hex_radius_join_bulk(
     radius_col: str = "radius_m",
     res: int | None = None,
     max_k: int = 12,
-    target_k: int = 6,
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Radius join for a DATAFRAME of circles — the hexgrid twin of
-    knn.radius_join_bulk.  Each query explodes its own gridDisk (two
-    nested ``sequence`` explodes over the axial loop, k per-row from
-    the query's latitude + radius), candidates equi-join points on the
-    cell id, exact haversine filters.
+    knn.radius_join_bulk.  Each query explodes its own gridDisk (k
+    per-row from the query's latitude + radius, :func:`_disk_cells`),
+    candidates equi-join points on the cell id, exact haversine
+    filters.
 
     ``res=None`` groups queries into PER-RESOLUTION BANDS: each query
     natively computes the finest res whose ring count lands near
-    ``target_k`` (s >= rho / (1.5*target_k - 2), one log2), the
+    ``_BAND_TARGET_K`` (s >= rho / (1.5*target_k - 2), one log2), the
     bounded distinct-res set (<= 21 values, 2-3 in practice) comes
     back to the driver, and one equi-join runs per band, unioned.  A
     single global res sized by the WORST query latitude was measured
@@ -173,102 +180,82 @@ def hex_radius_join_bulk(
     exploded candidate relation is per-query-bounded by 3k(k+1)+1 so
     query count is the only unknown."""
     _require_res_with_cell_col(res, cell_col)
-    if res is None:
-        if broadcast_queries is None:
-            cap = 100_000
-            broadcast_queries = queries.limit(cap + 1).count() <= cap
-        rho = _rho_col(F.col(qlat_col), F.col(radius_col))
-        s_needed = rho / F.lit(1.5 * target_k - 2.0)
-        s0 = hg.size(0)
-        rcol = F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(hg.MAX_RES),
-                F.floor(F.log2(F.lit(s0) / s_needed) - F.lit(1e-9)).cast(
-                    "int"
-                ),
-            ),
-        )
-        tagged = queries.withColumn("_hexres", rcol)
-        bands = sorted(
-            r["_hexres"]
-            for r in tagged.select("_hexres").distinct().collect()
-        )
-        if not bands:
-            bands = [hg.MAX_RES]  # empty query relation: typed empty out
-        parts = [
-            hex_radius_join_bulk(
-                points,
-                tagged.where(F.col("_hexres") == b).drop("_hexres"),
-                lat_col=lat_col,
-                lon_col=lon_col,
-                cell_col=cell_col,
-                query_id_col=query_id_col,
-                qlat_col=qlat_col,
-                qlon_col=qlon_col,
-                radius_col=radius_col,
-                res=int(b),
-                max_k=max_k,
-                broadcast_queries=broadcast_queries,
-            )
-            for b in bands
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    n = hg.ncols(res)
-    kcol = _k_col(F.col(qlat_col), F.col(radius_col), res)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(qlat_col).alias("_qlat"),
-        F.col(qlon_col).alias("_qlon"),
-        F.col(radius_col).alias("_radius"),
-        kcol.alias("_k"),
-        HX.hex_cell(F.col(qlat_col), F.col(qlon_col), res).alias("_qcell"),
-    ).where(F.col("_k") <= F.lit(max_k))
-    q = q.select(
-        "*",
-        F.explode(F.sequence(-F.col("_k"), F.col("_k"))).alias("_dq"),
-    )
-    q = q.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.greatest(-F.col("_k"), (-F.col("_dq")) - F.col("_k")),
-                F.least(F.col("_k"), (-F.col("_dq")) + F.col("_k")),
-            )
-        ).alias("_dr"),
-    )
-    nl = F.lit(n).cast("long")
-    cq = ((HX.hex_q(F.col("_qcell")) + F.col("_dq")) % nl + nl) % nl
-    cr = HX.hex_r(F.col("_qcell")) + F.col("_dr")
-    cand = q.select(
-        "query_id",
-        "_qlat",
-        "_qlon",
-        "_radius",
-        HX.hex_pack(res, cq, cr).alias("_ccell"),
-    ).dropDuplicates(["query_id", "_ccell"])
-    # the dedup is load-bearing when 2k+1 > ncols(res) (coarse res +
-    # huge radius): distinct (dq, dr) offsets wrap onto the same cell
-    # and would otherwise duplicate every matching (query, point) pair
     if broadcast_queries is None:
         cap = 100_000
         broadcast_queries = queries.limit(cap + 1).count() <= cap
-    if broadcast_queries:
-        cand = F.broadcast(cand)
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.col("_qlat"), F.col("_qlon")
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(qlat_col).alias("qlat"),
+        F.col(qlon_col).alias("qlon"),
+        F.col(radius_col).alias("_radius"),
     )
-    return (
-        pts.withColumn("_pcell", cell)
-        .join(cand, F.col("_pcell") == F.col("_ccell"), "inner")
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= F.col("_radius"))
-        .drop("_pcell", "_ccell", "_qlat", "_qlon", "_radius")
+
+    def band(q: DataFrame, r: int) -> DataFrame:
+        q = q.select(
+            "*",
+            _k_col(F.col("qlat"), F.col("_radius"), r).alias("_k"),
+            HX.hex_cell(F.col("qlat"), F.col("qlon"), r).alias("_qcell"),
+        ).where(F.col("_k") <= F.lit(max_k))
+        cells = _disk_cells(q, F.col("_k"), r).drop("_k", "_qcell")
+        if broadcast_queries:
+            cells = F.broadcast(cells)
+        key = _hex_key(lat_col, lon_col, r, cell_col)
+        return (
+            candidate_join(points, key, cells, lat_col, lon_col)
+            .where(F.col("dist_m") <= F.col("_radius"))
+            .drop("qlat", "qlon", "_radius")
+        )
+
+    if res is not None:
+        return band(q, res)
+    rho = _rho_col(F.col("qlat"), F.col("_radius"))
+    s_needed = rho / F.lit(1.5 * _BAND_TARGET_K - 2.0)
+    rcol = F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(hg.MAX_RES),
+            F.floor(F.log2(F.lit(hg.size(0)) / s_needed) - F.lit(1e-9)).cast(
+                "int"
+            ),
+        ),
     )
+    tagged = q.withColumn("_hexres", rcol)
+    bands = sorted(
+        r["_hexres"] for r in tagged.select("_hexres").distinct().collect()
+    ) or [hg.MAX_RES]  # empty query relation: typed empty out
+    return reduce(
+        DataFrame.unionByName,
+        (
+            band(tagged.where(F.col("_hexres") == b).drop("_hexres"), int(b))
+            for b in bands
+        ),
+    )
+
+
+def _disk_cells(q: DataFrame, k: F.Column, res: int) -> DataFrame:
+    """Each query row of ``q`` (query_id, qlat, qlon, _qcell, ...) ->
+    one row per cell of its gridDisk(``k``): two nested ``sequence``
+    explodes over the axial loop, all JVM-side, deduped per query.
+    Shared by :func:`hex_radius_join_bulk` and :func:`hex_knn_bulk`."""
+    x = q.select("*", F.explode(F.sequence(-k, k)).alias("_dq"))
+    x = x.select(
+        "*",
+        F.explode(
+            F.sequence(
+                F.greatest(-k, (-F.col("_dq")) - k),
+                F.least(k, (-F.col("_dq")) + k),
+            )
+        ).alias("_dr"),
+    )
+    nl = F.lit(hg.ncols(res)).cast("long")
+    cq = ((HX.hex_q(F.col("_qcell")) + F.col("_dq")) % nl + nl) % nl
+    cr = HX.hex_r(F.col("_qcell")) + F.col("_dr")
+    # the dedup is load-bearing when 2k+1 > ncols(res) (coarse res +
+    # huge radius): distinct (dq, dr) offsets wrap onto the same cell
+    # and would otherwise duplicate every matching (query, point) pair
+    return x.select(
+        *q.columns, HX.hex_pack(res, cq, cr).alias("cell_key")
+    ).dropDuplicates(["query_id", "cell_key"])
 
 
 def hex_knn(
@@ -282,79 +269,36 @@ def hex_knn(
     max_ring: int = 128,
 ) -> DataFrame:
     """k nearest points per query via hex k-ring expansion + exact
-    haversine re-rank — the north star's "H3 k-ring" kNN, structured
-    exactly like the geohash knn (knn.py:75): ALL pending queries run
-    in one pass per ring radius (one broadcast candidate relation, one
-    equi-join, one window top-k), and a query is certified done when
-    its kth candidate distance <= hexgrid.covered_ground_radius_m
-    (provable stop bound) — otherwise it retries with a doubled ring.
-    Interactive path: collects k x pending rows per round; pass a
-    cached ``points`` when multiple rounds are expected.  Ring counts
+    haversine re-rank — the north star's "H3 k-ring" kNN through
+    :func:`cell_join.knn_rounds`: a query is certified done when its kth
+    candidate distance <= hexgrid.covered_ground_radius_m (provable stop
+    bound), otherwise it retries with a doubled ring.  Ring counts
     double up to ``max_ring`` (disk(128) is ~49.5k broadcast rows per
     still-pending query — fine interactively); for SPARSE data where
-    the kth neighbor is far, prefer a coarser ``res`` over a huge
-    ring so candidates stay bounded."""
-    spark = points.sparkSession
-    id_col = points.columns[0]
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    pts = pts.withColumn("_pcell", cell)
+    the kth neighbor is far, prefer a coarser ``res`` over a huge ring
+    so candidates stay bounded."""
+    key = _hex_key(lat_col, lon_col, res, cell_col)
 
-    meta = {
-        qid: (qlat, qlon, hg.encode_cell_scalar(qlat, qlon, res))
-        for qid, qlat, qlon in queries
-    }
-    answers: dict[str, list] = {}
-    pending = list(queries)
-    ring = 2
-    while pending and ring <= max_ring:
-        rel = []
-        for qid, qlat, qlon in pending:
-            for c in hg.grid_disk(meta[qid][2], ring):
-                rel.append((qid, qlat, qlon, c))
-        cells = spark.createDataFrame(
-            rel, "query_id string, _qlat double, _qlon double, _ccell long"
-        )
-        dist = C.haversine(
-            F.col(lat_col), F.col(lon_col), F.col("_qlat"), F.col("_qlon")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist_m").asc(), F.col(id_col).asc()
-        )
-        got = (
-            pts.join(F.broadcast(cells), F.col("_pcell") == F.col("_ccell"))
-            .withColumn("dist_m", dist)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", id_col, lat_col, lon_col, "dist_m")
-            .collect()
-        )
-        by_q: dict[str, list] = {}
-        for row in got:
-            by_q.setdefault(row["query_id"], []).append(row)
-        nxt = []
-        for qid, qlat, qlon in pending:
-            rows = sorted(by_q.get(qid, []), key=lambda r: r["rank"])
-            bound = hg.covered_ground_radius_m(qlat, ring, res)
-            if len(rows) == k and rows[-1]["dist_m"] <= bound:
-                answers[qid] = rows
-            else:
-                nxt.append((qid, qlat, qlon))
-        pending = nxt
-        if ring >= max_ring:
-            break
-        ring = min(ring * 2, max_ring)  # land ON max_ring, not past it
-    if pending:
-        raise ValueError(
-            f"hex_knn: {len(pending)} queries unresolved at max_ring="
-            f"{max_ring}; use a coarser res or raise max_ring"
-        )
-    out = [tuple(r) for rows in answers.values() for r in rows]
-    id_type = points.schema[id_col].dataType.simpleString()
-    schema = (
-        f"query_id string, rank int, {id_col} {id_type}, "
-        f"{lat_col} double, {lon_col} double, dist_m double"
-    )
-    return spark.createDataFrame(out, schema)
+    def disk(ring: int):
+        def cover(qlat, qlon):
+            center = hg.encode_cell_scalar(qlat, qlon, res)
+            return (
+                hg.grid_disk(center, ring),
+                hg.covered_ground_radius_m(qlat, ring, res),
+            )
+
+        return key, cover
+
+    def rings():  # 2, 4, 8, ... landing ON max_ring, not past it
+        ring = 2
+        while ring < max_ring:
+            yield ring
+            ring *= 2
+        if max_ring >= 2:
+            yield max_ring
+
+    rounds = (disk(r) for r in rings())
+    return knn_rounds(points, queries, k, rounds, lat_col, lon_col)
 
 
 def hex_heatmap(
@@ -388,10 +332,7 @@ def hex_heatmap(
                 F.round(clon, 6).alias("center_lon"),
             )
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    return reduce(DataFrame.unionByName, outs)
 
 
 def write_hex_sorted(
@@ -446,17 +387,10 @@ def hex_radius_join_stored(
     auto-detection of stale cell columns (the s2_30 advice)."""
     part_center = hg.encode_cell_scalar(center_lat, center_lon, partition_res)
     pk = hg.k_for_radius(center_lat, radius_m, partition_res)
-    part_cells = hg.grid_disk(part_center, pk)
-    k = hg.k_for_radius(center_lat, radius_m, res)
-    disk = hg.grid_disk(hg.encode_cell_scalar(center_lat, center_lon, res), k)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.lit(center_lat), F.lit(center_lon)
-    )
-    return (
-        points.where(F.col(part_col).isin(part_cells))
-        .where(F.col(cell_col).isin(disk))
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= F.lit(radius_m))
+    return hex_radius_join(
+        points.where(F.col(part_col).isin(hg.grid_disk(part_center, pk))),
+        center_lat, center_lon, radius_m, res=res,
+        lat_col=lat_col, lon_col=lon_col, cell_col=cell_col,
     )
 
 
@@ -467,14 +401,15 @@ def hex_pip_join(
     lon_col: str = "lon",
     cell_col: str | None = None,
     res: int | None = None,
-    max_cells: int = 2048,
+    how: str = "inner",
 ) -> DataFrame:
     """Point-in-polygon broadcast join through the hexgrid index — the
-    hex twin of pip_join (geohash) / s2_pip_join, same plan shape:
+    hex twin of pip_join (geohash) / s2_pip_join, same plan shape
+    (:func:`cell_join.broadcast_pip`):
 
     1. driver: hex covering per polygon (hexgrid.hex_cover_with_borders
        — bbox-conservative interior/border classification, holes
-       demote);
+       demote), memoized for the default fixture set;
     2. broadcast (polygon_id, cell, is_border) at ONE global res —
        hex children only approximately tile their parent, so there is
        no per-polygon-length normalization like the geohash expand;
@@ -483,44 +418,37 @@ def hex_pip_join(
        classify as border and fall through to the exact check —
        correctness never depends on res);
     3. points keyed by the Arrow kernel cell (hot-path posture of
-       _points_with_cell), ONE broadcast hash equi-join;
+       :func:`_hex_key`), ONE broadcast hash equi-join;
     4. interior-cell rows match with no Python; border-cell rows run
        the exact hole-aware ray-cast pandas UDF — the same exactness
        contract as the other two families, so all three share the PIP
        oracle.
+
+    how='inner' returns input columns + polygon_id;
+    'left_semi'/'left_anti' return matched/unmatched input rows in one
+    pass.
     """
     from ..fixtures import polygons_np
-    from ..functions.udfs import make_pip_udf
 
     _require_res_with_cell_col(res, cell_col)
-    spark = points.sparkSession
     polys = polygons_np(polygons)
-    rings_list = [
-        [np.asarray(r, dtype=np.float64) for r in rings]
-        for rings in polys.values()
-    ]
-    if res is None:
-        res = hg.cover_res_for_rings(rings_list, max_cells=max_cells)
-    rows = []
-    for pid, rings in polys.items():
-        rr = [np.asarray(r, dtype=np.float64) for r in rings]
-        interior, border = hg.hex_cover_with_borders(rr, res)
-        rows.extend((pid, c, False) for c in interior)
-        rows.extend((pid, c, True) for c in border)
-    cells = spark.createDataFrame(
-        rows, "polygon_id string, _ccell long, is_border boolean"
-    )
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    pip = make_pip_udf(polys)
-    return (
-        pts.withColumn("_pcell", cell)
-        .join(F.broadcast(cells), F.col("_pcell") == F.col("_ccell"), "inner")
-        .where(
-            (~F.col("is_border"))
-            | pip(F.col("polygon_id"), F.col(lat_col), F.col(lon_col))
-        )
-        .drop("_pcell", "_ccell", "is_border")
-    )
+
+    def cover():
+        r = res
+        if r is None:
+            r = hg.cover_res_for_rings(
+                list(polys.values()), max_cells=_COVER_MAX_CELLS
+            )
+        rows = []
+        for pid, rings in polys.items():
+            interior, border = hg.hex_cover_with_borders(rings, r)
+            rows.extend((pid, c, False) for c in interior)
+            rows.extend((pid, c, True) for c in border)
+        return rows, r
+
+    rows, cover_res = default_cover(polygons, ("hex", res), cover)
+    key = _hex_key(lat_col, lon_col, cover_res, cell_col)
+    return broadcast_pip(points, key, rows, polys, how, lat_col, lon_col)
 
 
 def hex_knn_bulk(
@@ -539,9 +467,8 @@ def hex_knn_bulk(
     """kNN for a DATAFRAME of queries through the hex index — the
     millions-of-queries twin of :func:`hex_knn` (which drives an
     interactive loop), mirroring knn.knn_bulk's shape: each query
-    explodes its fixed gridDisk(ring) (two nested ``sequence``
-    explodes), candidates equi-join points on the cell id (Arrow
-    kernel key on the big side), native haversine, window top-k PER
+    explodes its fixed gridDisk(ring) (:func:`_disk_cells`), candidates
+    equi-join points on the cell id, native haversine, window top-k PER
     QUERY (partitionBy(query_id), never a global sort).
 
     Fixed rings make the margin approximate: the ``guaranteed`` column
@@ -550,119 +477,30 @@ def hex_knn_bulk(
     of hexgrid.covered_ground_radius_m — conservative, degenerating to
     false near the poles); callers re-run false rows through
     :func:`hex_knn`, which certifies with the pole-safe bound."""
-    n = hg.ncols(res)
     s = hg.size(res)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.col(qlat_col).alias("_qlat"),
-        F.col(qlon_col).alias("_qlon"),
+        F.col(qlat_col).alias("qlat"),
+        F.col(qlon_col).alias("qlon"),
         HX.hex_cell(F.col(qlat_col), F.col(qlon_col), res).alias("_qcell"),
-    )
-    q = q.select(
-        "*", F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("_dq")
-    )
-    q = q.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.greatest(F.lit(-ring), (-F.col("_dq")) - F.lit(ring)),
-                F.least(F.lit(ring), (-F.col("_dq")) + F.lit(ring)),
-            )
-        ).alias("_dr"),
-    )
-    nl = F.lit(n).cast("long")
-    cq = ((HX.hex_q(F.col("_qcell")) + F.col("_dq")) % nl + nl) % nl
-    cr = HX.hex_r(F.col("_qcell")) + F.col("_dr")
-    cand = q.select(
-        "query_id", "_qlat", "_qlon", HX.hex_pack(res, cq, cr).alias("_ccell")
-    ).dropDuplicates(["query_id", "_ccell"])  # wrap collisions, see bulk
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.col("_qlat"), F.col("_qlon")
-    )
-    id_col = points.columns[0]
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col(id_col).asc()
     )
     rho = 1.5 * ring * s - 2.0 * s
     sin_max = F.least(
         F.lit(1.0),
-        F.abs(F.sin(F.col("_qlat") * F.lit(hg.RAD))) + F.lit(rho / hg.Y_SCALE),
+        F.abs(F.sin(F.col("qlat") * F.lit(hg.RAD))) + F.lit(rho / hg.Y_SCALE),
     )
     bound = (
         F.lit(rho * hg.M_PER_DEG)
         * F.sqrt(F.lit(1.0) - sin_max * sin_max)
     )
+    cells = _disk_cells(q, F.lit(ring), res).drop("_qcell")
+    key = _hex_key(lat_col, lon_col, res, cell_col)
     return (
-        pts.withColumn("_pcell", cell)
-        .join(cand, F.col("_pcell") == F.col("_ccell"), "inner")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
+        top_k(
+            candidate_join(points, key, cells, lat_col, lon_col),
+            k,
+            points.columns[0],
+        )
         .withColumn("guaranteed", F.col("dist_m") <= bound)
-        .drop("_pcell", "_ccell", "_qlat", "_qlon")
+        .drop("qlat", "qlon")
     )
-
-
-def hex_pip_semi_anti(
-    points: DataFrame,
-    how: str,
-    polygons: dict[str, list] | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    cell_col: str | None = None,
-    res: int | None = None,
-    max_cells: int = 2048,
-) -> DataFrame:
-    """One-pass semi/anti PIP through the hex index — the hex twin of
-    pip_join(how='left_semi'/'left_anti') (pip_join.py:120): the
-    driver-side cell relation is PRE-GROUPED by cell so every point
-    meets AT MOST ONE broadcast row (the join cannot duplicate — no
-    distinct(), no second scan of the big side); matched = some
-    polygon holds the whole cell (interior_any) OR some border polygon
-    contains the exact point (pandas UDF over the short border-pid
-    list)."""
-    from ..fixtures import polygons_np
-    from ..functions.udfs import make_pip_any_udf
-
-    if how not in ("left_semi", "left_anti"):
-        raise ValueError(f"unsupported how={how!r}")
-    _require_res_with_cell_col(res, cell_col)
-    spark = points.sparkSession
-    polys = polygons_np(polygons)
-    rings_list = [
-        [np.asarray(r, dtype=np.float64) for r in rings]
-        for rings in polys.values()
-    ]
-    if res is None:
-        res = hg.cover_res_for_rings(rings_list, max_cells=max_cells)
-    by_key: dict[int, tuple[bool, set[str]]] = {}
-    for pid, rings in polys.items():
-        rr = [np.asarray(r, dtype=np.float64) for r in rings]
-        interior, border = hg.hex_cover_with_borders(rr, res)
-        for c in interior:
-            ia, b = by_key.setdefault(c, (False, set()))
-            by_key[c] = (True, b)
-        for c in border:
-            ia, b = by_key.setdefault(c, (False, set()))
-            b.add(pid)
-            by_key[c] = (ia, b)
-    grouped = [
-        (k, interior, sorted(border) if not interior else [])
-        for k, (interior, border) in by_key.items()
-    ]
-    cells_g = spark.createDataFrame(
-        grouped, "_ccell long, interior_any boolean, border_pids array<string>"
-    )
-    pts, cell = _points_with_cell(points, lat_col, lon_col, res, cell_col)
-    pip_any = make_pip_any_udf(polys)
-    matched = F.coalesce(
-        F.col("interior_any")
-        | pip_any(F.col("border_pids"), F.col(lat_col), F.col(lon_col)),
-        F.lit(False),
-    )
-    joined = pts.withColumn("_pcell", cell).join(
-        F.broadcast(cells_g), F.col("_pcell") == F.col("_ccell"), "left"
-    )
-    keep = matched if how == "left_semi" else ~matched
-    return joined.where(keep).select(*points.columns)

@@ -26,12 +26,13 @@ kth candidate is closer than that, no outside point can displace it.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
 from ..kernels import geohash as kgh
 from ..kernels import geometry as kgeo
+from .cell_join import candidate_join, knn_rounds, top_k
 
 
 def _ring_cells(center_cell: str, radius: int) -> set[str]:
@@ -70,6 +71,18 @@ def _cell_min_dim_m(cell: str) -> float:
     return min(width, height)
 
 
+def _min_cell_dim_col(worst_lat: F.Column, precision: int) -> F.Column:
+    """Native twin of :func:`_cell_min_dim_m` for precision-p cells at
+    latitude ``worst_lat``: cell height is constant in degrees, width
+    shrinks with cos(lat)."""
+    lat_bits, lon_bits = C.cell_bits(precision)
+    deg_m = kgeo.DEGREE_LATITUDE_METERS
+    width_m = F.lit(360.0 / (1 << lon_bits) * deg_m) * F.cos(
+        F.radians(worst_lat)
+    )
+    return F.least(F.lit(180.0 / (1 << lat_bits) * deg_m), width_m)
+
+
 def knn(
     points: DataFrame,
     queries: list[tuple[str, float, float]],
@@ -80,14 +93,12 @@ def knn(
     precision: int = 5,
     max_ring: int = 8,
 ) -> DataFrame:
-    """k nearest ``points`` to each query (query_id, lat, lon).
-
-    ALL queries run in one pass per ring radius: the (query_id, cell)
-    candidate relation for every still-unsatisfied query is broadcast,
-    one equi-join + one window top-k executes distributedly, and only
-    queries whose kth candidate is not provably exact retry with a
-    wider ring (typically none after round one).  Jobs scale with ring
-    rounds, not with the number of queries.
+    """k nearest ``points`` to each query (query_id, lat, lon) through
+    :func:`cell_join.knn_rounds`: ring radius r = 1, 2, ..,
+    ``max_ring`` of precision-``precision`` cells around each query's
+    cell, certified once the kth candidate is closer than (r - 1)
+    minimum cell dimensions; queries left at the ring cap take the
+    exact :func:`knn_window` fallback.
 
     Each ring round re-scans ``points`` from source (this is the
     bounded INTERACTIVE path — collects only k x pending rows; use
@@ -95,80 +106,49 @@ def knn(
     round is expected (sparse data / tight r0), pass a ``.cache()``-d
     points DataFrame so later rounds read from memory instead of
     re-scanning the table (VERDICT r3 note)."""
-    from ..functions.columns import cell_prefix, string_cell_to_long
+    key = C.cell_prefix(F.col(cell_id_col), precision)
 
-    spark = points.sparkSession
-    key = cell_prefix(F.col(cell_id_col), precision)
-    id_col = points.columns[0]
+    def ring(radius: int):
+        def cover(qlat, qlon):
+            center = str(kgh.encode(qlat, qlon, precision)[0])
+            cells = sorted(_ring_cells(center, radius))
+            guarantee = (radius - 1) * _cell_min_dim_m(center)
+            return [C.string_cell_to_long(c) for c in cells], guarantee
 
-    meta = {}
-    for qid, qlat, qlon in queries:
-        center = str(kgh.encode(qlat, qlon, precision)[0])
-        meta[qid] = (qlat, qlon, center, _cell_min_dim_m(center))
+        return key, cover
 
-    answers: dict[str, list] = {}
-    pending = list(queries)
-    radius = 1
-    while pending and radius <= max_ring:
-        rel = []
-        for qid, qlat, qlon in pending:
-            _, _, center, _ = meta[qid]
-            for c in sorted(_ring_cells(center, radius)):
-                rel.append((qid, qlat, qlon, string_cell_to_long(c)))
-        cells = spark.createDataFrame(
-            rel, "query_id string, qlat double, qlon double, cell_key long"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist_m").asc(), F.col(id_col).asc()
-        )
-        topk = (
-            points.join(F.broadcast(cells), key == F.col("cell_key"), "inner")
-            .withColumn(
-                "dist_m",
-                C.haversine(
-                    F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")
-                ),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .collect()
-        )
-        by_query: dict[str, list] = {}
-        for row in sorted(topk, key=lambda r: r["rank"]):
-            by_query.setdefault(row["query_id"], []).append(row)
-        still = []
-        for q in pending:
-            qid = q[0]
-            cand = by_query.get(qid, [])
-            guarantee = (radius - 1) * meta[qid][3]
-            if len(cand) >= k and cand[k - 1]["dist_m"] <= guarantee:
-                answers[qid] = cand
-            else:
-                still.append(q)
-        pending = still
-        radius += 1
+    rounds = (ring(r) for r in range(1, max_ring + 1))
+    return knn_rounds(points, queries, k, rounds, lat_col, lon_col)
 
-    if pending:  # ring cap hit: exact window fallback for the leftovers
-        fb = knn_window(
-            points, pending, k, lat_col=lat_col, lon_col=lon_col
-        ).collect()
-        for row in sorted(fb, key=lambda r: (r["query_id"], r["rank"])):
-            answers.setdefault(row["query_id"], []).append(row)
 
-    results = []
-    for qid, _, _ in queries:
-        for rank, row in enumerate(answers.get(qid, []), start=1):
-            results.append(
-                (qid, rank, row["dist_m"], *[row[c] for c in points.columns])
-            )
-    schema_cols = ", ".join(
-        ["query_id string", "rank int", "dist_m double"]
-        + [
-            f"`{c}` {points.schema[c].dataType.simpleString()}"
-            for c in points.columns
-        ]
+def _ring_cells_col(
+    q: DataFrame, lo: F.Column, hi: F.Column, precision: int
+) -> DataFrame:
+    """Each query row of ``q`` (query_id, qlat, qlon, ...) -> one row per
+    precision-p cell of its Chebyshev ring at offsets ``lo..hi``, via
+    pure index arithmetic (lon wraps mod 2^lon_bits, lat clamps — built
+    with interleave_indices, zero UDFs), deduped per query.  The bulk
+    twin of :func:`_ring_cells`, shared by :func:`knn_bulk` and
+    :func:`radius_join_bulk`."""
+    lat_bits, lon_bits = C.cell_bits(precision)
+    n_lon = 1 << lon_bits
+    max_ia = (1 << lat_bits) - 1
+    qia, qio = C.cell_indices(F.col("qlat"), F.col("qlon"), precision)
+    # explode the (di, dj) offsets FIRST, then interleave once per row:
+    # building a (2*ring+1)^2 array of interleave expressions instead
+    # would inline that many copies of the 32k-entry spread lookup
+    # table into the plan (~200 KB of constant each — measured 7x
+    # slower at ring=2)
+    x = q.select("*", qia.alias("_qia"), qio.alias("_qio"))
+    x = x.select("*", F.explode(F.sequence(lo, hi)).alias("_di"))
+    x = x.select("*", F.explode(F.sequence(lo, hi)).alias("_dj"))
+    ia = F.greatest(
+        F.lit(0), F.least(F.lit(max_ia), F.col("_qia") + F.col("_di"))
     )
-    return spark.createDataFrame(results, schema_cols)
+    io = (F.col("_qio") + F.col("_dj") + F.lit(n_lon)) % F.lit(n_lon)
+    return x.select(
+        *q.columns, C.interleave_indices(ia, io, precision).alias("cell_key")
+    ).dropDuplicates(["query_id", "cell_key"])
 
 
 def knn_bulk(
@@ -190,78 +170,43 @@ def knn_bulk(
     stay distributed).
 
     Shape: each query explodes its Chebyshev ``ring`` of precision-p
-    cells via pure index arithmetic (lon wraps mod 2^lon_bits, lat
-    clamps — built with interleave_indices, zero UDFs, (2*ring+1)^2
-    array entries deduped) -> shuffle equi-join against the points'
-    cell prefix (both sides hash-partition on the cell key; bucketing
-    the points table by the prefix removes its shuffle entirely) ->
-    native haversine -> window top-k PER QUERY (partitionBy(query_id),
-    never a global sort).
+    cells (:func:`_ring_cells_col`) -> shuffle equi-join against the
+    points' cell prefix (bucketing the points table by the prefix
+    removes its shuffle entirely) -> native haversine -> window top-k
+    PER QUERY (:func:`cell_join.top_k`).
 
     Fixed-radius rings make the answer approximate at the margin: the
     ``guaranteed`` column is true when the kth candidate is provably
     exact (closer than the (ring-1)-cell covered disk, same bound as
     :func:`knn`); callers re-run the false rows with a bigger ring.
     """
-    lat_bits, lon_bits = C.cell_bits(precision)
-    n_lon = 1 << lon_bits
-    max_ia = (1 << lat_bits) - 1
-    qia, qio = C.cell_indices(F.col(qlat_col), F.col(qlon_col), precision)
-    # explode the (di, dj) offsets FIRST, then interleave once per row:
-    # building a (2*ring+1)^2 array of interleave expressions instead
-    # would inline that many copies of the 32k-entry spread lookup
-    # table into the plan (~200 KB of constant each — measured 7x
-    # slower at ring=2)
-    di = F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("_di")
-    dj = F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("_dj")
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(qlat_col).alias("qlat"),
         F.col(qlon_col).alias("qlon"),
-        qia.alias("_qia"),
-        qio.alias("_qio"),
-    ).select("*", di).select("*", dj)
-    ia = F.greatest(
-        F.lit(0), F.least(F.lit(max_ia), F.col("_qia") + F.col("_di"))
-    )
-    io = (F.col("_qio") + F.col("_dj") + F.lit(n_lon)) % F.lit(n_lon)
-    qx = q.select(
-        "query_id", "qlat", "qlon",
-        C.interleave_indices(ia, io, precision).alias("cell_key"),
-    ).dropDuplicates(["query_id", "cell_key"])
-    key = C.cell_prefix(F.col(cell_id_col), precision)
-    id_col = points.columns[0]
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col(id_col).asc()
     )
     # guaranteed-covered disk radius: every point outside the ring is at
-    # least (ring-1) * min cell dimension away (same bound as knn()).
-    # Cell height is constant in degrees; width shrinks with cos(lat),
-    # so size the bound at the WORST latitude the ring itself reaches
-    # (|qlat| + ring rows poleward) — using cos(qlat) would overstate
-    # the guarantee near the poles.
-    height_deg = 180.0 / (1 << lat_bits)
-    height_m = height_deg * kgeo.DEGREE_LATITUDE_METERS
+    # least (ring-1) * min cell dimension away (same bound as knn()),
+    # sized at the WORST latitude the ring itself reaches (|qlat| +
+    # ring rows poleward) — using cos(qlat) would overstate the
+    # guarantee near the poles.
+    height_deg = 180.0 / (1 << C.cell_bits(precision)[0])
     ring_worst_lat = F.least(
         F.lit(90.0), F.abs(F.col("qlat")) + F.lit(float(ring) * height_deg)
     )
-    width_m = F.lit(360.0 / n_lon * kgeo.DEGREE_LATITUDE_METERS) * F.cos(
-        F.radians(ring_worst_lat)
+    bound = F.lit(float(ring - 1)) * _min_cell_dim_col(
+        ring_worst_lat, precision
     )
-    bound = F.lit(float(ring - 1)) * F.least(F.lit(height_m), width_m)
+    cells = _ring_cells_col(q, F.lit(-ring), F.lit(ring), precision)
+    key = C.cell_prefix(F.col(cell_id_col), precision)
     return (
-        points.withColumn("_pkey", key)
-        .join(qx, F.col("_pkey") == F.col("cell_key"), "inner")
-        .withColumn(
-            "dist_m",
-            C.haversine(
-                F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")
-            ),
+        top_k(
+            candidate_join(points, key, cells, lat_col, lon_col),
+            k,
+            points.columns[0],
         )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
         .withColumn("guaranteed", F.col("dist_m") <= bound)
-        .drop("_pkey", "cell_key", "qlat", "qlon")
+        .drop("qlat", "qlon")
     )
 
 
@@ -290,11 +235,7 @@ def radius_join_bulk(
 
     Plan: zero UDFs; per-query output is the answer set itself so
     everything stays distributed."""
-    lat_bits, lon_bits = C.cell_bits(precision)
-    n_lon = 1 << lon_bits
-    max_ia = (1 << lat_bits) - 1
     deg_m = kgeo.DEGREE_LATITUDE_METERS
-    height_m = (180.0 / (1 << lat_bits)) * deg_m
     # cell width shrinks poleward — size the extent at the WORST
     # latitude the radius can reach, so the ring covers the disk even
     # when the query sits equatorward of its matches.  The clamp is at
@@ -304,43 +245,23 @@ def radius_join_bulk(
     worst_lat = F.least(
         F.lit(90.0), F.abs(F.col(qlat_col)) + F.col(radius_col) / F.lit(deg_m)
     )
-    width_m = F.lit(360.0 / n_lon * deg_m) * F.cos(F.radians(worst_lat))
-    min_dim = F.least(F.lit(height_m), width_m)
+    min_dim = _min_cell_dim_col(worst_lat, precision)
     extent = F.ceil(F.col(radius_col) / min_dim).cast("int")
-    qia, qio = C.cell_indices(F.col(qlat_col), F.col(qlon_col), precision)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(qlat_col).alias("qlat"),
         F.col(qlon_col).alias("qlon"),
         F.col(radius_col).alias("_radius"),
-        # the where() below drops over-cap queries, so extent is
-        # already <= max_ring here — no truncated-ring serving
         extent.alias("_ext"),
-        qia.alias("_qia"),
-        qio.alias("_qio"),
-    ).where(extent <= max_ring)
-    di = F.explode(F.sequence(-F.col("_ext"), F.col("_ext"))).alias("_di")
-    q = q.select("*", di)
-    dj = F.explode(F.sequence(-F.col("_ext"), F.col("_ext"))).alias("_dj")
-    q = q.select("*", dj)
-    ia = F.greatest(
-        F.lit(0), F.least(F.lit(max_ia), F.col("_qia") + F.col("_di"))
-    )
-    io = (F.col("_qio") + F.col("_dj") + F.lit(n_lon)) % F.lit(n_lon)
-    qx = q.select(
-        "query_id", "qlat", "qlon", "_radius",
-        C.interleave_indices(ia, io, precision).alias("cell_key"),
-    ).dropDuplicates(["query_id", "cell_key"])
+    ).where(F.col("_ext") <= max_ring)  # never a truncated ring
+    cells = _ring_cells_col(
+        q, -F.col("_ext"), F.col("_ext"), precision
+    ).drop("_ext")
     key = C.cell_prefix(F.col(cell_id_col), precision)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")
-    )
     return (
-        points.withColumn("_pkey", key)
-        .join(qx, F.col("_pkey") == F.col("cell_key"), "inner")
-        .withColumn("dist_m", dist)
+        candidate_join(points, key, cells, lat_col, lon_col)
         .where(F.col("dist_m") <= F.col("_radius"))
-        .drop("_pkey", "cell_key", "qlat", "qlon", "_radius")
+        .drop("qlat", "qlon", "_radius")
     )
 
 
@@ -356,11 +277,5 @@ def knn_window(
     spark = points.sparkSession
     qdf = spark.createDataFrame(queries, "query_id string, qlat double, qlon double")
     dist = C.haversine(F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon"))
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col(points.columns[0]).asc())
-    return (
-        points.crossJoin(F.broadcast(qdf))
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("qlat", "qlon")
-    )
+    cand = points.crossJoin(F.broadcast(qdf)).withColumn("dist_m", dist)
+    return top_k(cand, k, points.columns[0]).drop("qlat", "qlon")

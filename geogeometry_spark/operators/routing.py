@@ -91,7 +91,10 @@ def _loop_partitions(spark, override: int | None = None) -> int:
     — while callers with known graph sizes can override."""
     if override is not None:
         return max(1, int(override))
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # non-numeric conf, e.g. "auto" on managed platforms
+        sess = spark.sparkContext.defaultParallelism
     return max(8, sess // 4)
 
 
@@ -818,15 +821,13 @@ def betweenness(
             .alias("_s"),
         )
 
-    # fixed-round propagation.  CHAIN=1 (per-round materialization)
-    # measured FASTEST (56.9 s vs 63.5/63.9/70.7 at chain 3/6/12 on the
+    # fixed-round propagation, one round + localCheckpoint per
+    # iteration.  Per-round materialization measured FASTEST (56.9 s vs
+    # 63.5/63.9/70.7 s chaining 3/6/12 rounds per checkpoint on the
     # 16k-lattice bench entry): the chained plans re-read the
     # checkpoint linearly but lose cross-round block locality, while
     # the per-round job under the scoped AQE-off/loop-partition conf
-    # (iterative_loop_conf) already has a minimal 2-stage shape.  The
-    # env override GEO_BRANDES_CHAIN exists for re-measurement on
-    # other hosts; results are bit-identical at any value.
-    _CHAIN = int(__import__("os").environ.get("GEO_BRANDES_CHAIN", "1"))
+    # (iterative_loop_conf) already has a minimal 2-stage shape.
     sigma = nodes.select(
         "node",
         F.when(F.col("_seed"), F.lit(1)).otherwise(F.lit(0))
@@ -836,16 +837,10 @@ def betweenness(
     with iterative_loop_conf(
         spark, aqe=False, shuffle_partitions=_loop_partitions(spark)
     ):
-        done = 0
-        while done < int(rounds):
-            step = min(_CHAIN, int(rounds) - done)
-            cur = sigma
-            for _ in range(step):
-                cur = _sigma_round(cur)
-            new_sigma = cur.localCheckpoint()
+        for _ in range(int(rounds)):
+            new_sigma = _sigma_round(sigma).localCheckpoint()
             sigma.unpersist()
             sigma = new_sigma
-            done += step
 
     su = sigma.select(F.col("node").alias("_u"), F.col("_s").alias("_su"))
     sv = sigma.select(F.col("node").alias("_v"), F.col("_s").alias("_sv"))
@@ -888,16 +883,10 @@ def betweenness(
     with iterative_loop_conf(
         spark, aqe=False, shuffle_partitions=_loop_partitions(spark)
     ):
-        done = 0
-        while done < int(rounds):
-            step = min(_CHAIN, int(rounds) - done)
-            cur = delta
-            for _ in range(step):
-                cur = _delta_round(cur)
-            new_delta = cur.localCheckpoint()
+        for _ in range(int(rounds)):
+            new_delta = _delta_round(delta).localCheckpoint()
             delta.unpersist()
             delta = new_delta
-            done += step
 
     out = (
         nodes.where(~F.col("_seed"))

@@ -18,10 +18,17 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import columns as C
 from ..functions import s2cell as S2
 from ..functions.udfs import s2_cell_udf
 from ..kernels import s2 as ks2
+from .cell_join import (
+    broadcast_pip,
+    candidate_join,
+    default_cover,
+    distributed_pip,
+    knn_rounds,
+    radius_join_cells,
+)
 
 
 def _probe_key(points: DataFrame, lat_col: str, lon_col: str, level: int,
@@ -63,20 +70,12 @@ def s2_radius_join(
     """Points within ``radius_m`` of the center, pruned by a conservative
     S2 cap covering (kernels/s2.py cap_covering) before the exact
     distance predicate.  Output = input columns + ``dist_m``."""
-    spark = points.sparkSession
     if level is None:
         level = ks2.suitable_level(radius_m)
     ids, _interior = ks2.cap_covering(center_lat, center_lon, radius_m, level)
-    cells = spark.createDataFrame([(int(i),) for i in ids], "cell_key long")
     key = _probe_key(points, lat_col, lon_col, level, cell_col)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.lit(center_lat), F.lit(center_lon)
-    )
-    return (
-        points.join(F.broadcast(cells), key == F.col("cell_key"), "inner")
-        .drop("cell_key")
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= F.lit(radius_m))
+    return radius_join_cells(
+        points, key, ids, center_lat, center_lon, radius_m, lat_col, lon_col
     )
 
 
@@ -97,90 +96,27 @@ def s2_knn(
     of the cap, so once the kth candidate's distance is <= the cap
     radius, no uncovered point can beat it.
 
-    All pending queries share one cap radius per round (radius doubles
-    each round, level = suitable_level(radius)), so each round is ONE
-    broadcast equi-join + window top-k over every query at once; jobs
-    scale with rounds, not queries.  Output schema matches ``knn``:
-    (query_id, rank, dist_m, *points.columns).
-
-    ``id_col`` (default: the first column, matching knn's contract)
-    tie-breaks equal distances at the kth boundary and MUST be unique
-    and orderable, or the boundary selection is nondeterministic
-    relative to knn_window's exact ordering (ADVICE r2).
-
-    Like ``knn``, each round re-scans ``points`` (bounded interactive
-    path; ``s2_radius_join_bulk``/``knn_bulk`` are the relation-scale
-    twins) — pass a ``.cache()``-d points DataFrame when multiple
-    rounds are expected (VERDICT r3 note).
+    All pending queries share one cap radius per round (``r0_m``,
+    doubling each round, level = suitable_level(radius)) through
+    :func:`cell_join.knn_rounds`: one broadcast equi-join + window top-k
+    per round, the exact knn_window fallback after ``max_rounds``, and
+    the ``knn`` output schema (query_id, rank, dist_m, *points.columns).
+    ``id_col`` (default: the first column) tie-breaks the kth boundary.
+    Pass a ``.cache()``-d points DataFrame when multiple rounds are
+    expected; ``s2_radius_join_bulk`` / ``knn_bulk`` are the
+    relation-scale twins.
     """
-    from pyspark.sql import Window
 
-    spark = points.sparkSession
-    id_col = id_col or points.columns[0]
-    answers: dict[str, list] = {}
-    pending = list(queries)
-    radius = float(r0_m)
-    for _ in range(max_rounds):
-        if not pending:
-            break
+    def cap(radius: float):
         level = ks2.suitable_level(radius)
-        rel = []
-        for qid, qlat, qlon in pending:
-            ids, _ = ks2.cap_covering(qlat, qlon, radius, level)
-            rel.extend((qid, qlat, qlon, int(c)) for c in ids)
-        cells = spark.createDataFrame(
-            rel, "query_id string, qlat double, qlon double, cell_key long"
-        )
-        key = _probe_key(points, lat_col, lon_col, level, cell_col)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist_m").asc(), F.col(id_col).asc()
-        )
-        topk = (
-            points.join(F.broadcast(cells), key == F.col("cell_key"), "inner")
-            .withColumn(
-                "dist_m",
-                C.haversine(
-                    F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")
-                ),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .collect()
-        )
-        by_query: dict[str, list] = {}
-        for row in sorted(topk, key=lambda r: r["rank"]):
-            by_query.setdefault(row["query_id"], []).append(row)
-        still = []
-        for q in pending:
-            cand = by_query.get(q[0], [])
-            if len(cand) >= k and cand[k - 1]["dist_m"] <= radius:
-                answers[q[0]] = cand
-            else:
-                still.append(q)
-        pending = still
-        radius *= 2.0
-    if pending:  # cap hit: exact global fallback for the leftovers
-        from .knn import knn_window
 
-        fb = knn_window(
-            points, pending, k, lat_col=lat_col, lon_col=lon_col
-        ).collect()
-        for row in sorted(fb, key=lambda r: (r["query_id"], r["rank"])):
-            answers.setdefault(row["query_id"], []).append(row)
-    results = []
-    for qid, _, _ in queries:
-        for rank, row in enumerate(answers.get(qid, []), start=1):
-            results.append(
-                (qid, rank, row["dist_m"], *[row[c] for c in points.columns])
-            )
-    schema_cols = ", ".join(
-        ["query_id string", "rank int", "dist_m double"]
-        + [
-            f"`{c}` {points.schema[c].dataType.simpleString()}"
-            for c in points.columns
-        ]
-    )
-    return spark.createDataFrame(results, schema_cols)
+        def cover(qlat, qlon):
+            return ks2.cap_covering(qlat, qlon, radius, level)[0], radius
+
+        return _probe_key(points, lat_col, lon_col, level, cell_col), cover
+
+    rounds = (cap(float(r0_m) * 2.0**i) for i in range(max_rounds))
+    return knn_rounds(points, queries, k, rounds, lat_col, lon_col, id_col)
 
 
 def _pip_level(polys: dict) -> int:
@@ -203,23 +139,13 @@ def _pip_level(polys: dict) -> int:
     return min(max(levels), min(levels) + 3)
 
 
-# default-fixture covering relation, memoized per level (mirrors
-# pip_join's _DEFAULT_RELATION_CACHE — ~0.2 s of driver recursion per
-# call otherwise, byte-identical result)
-_DEFAULT_S2_RELATION: dict[int, list] = {}
-
-
-def _s2_cell_relation(polys: dict, level: int, is_default: bool) -> list:
-    if is_default and level in _DEFAULT_S2_RELATION:
-        return _DEFAULT_S2_RELATION[level]
+def _s2_cell_relation(polys: dict, level: int) -> list:
     rows = []
     for pid, rings in polys.items():
         ids, border, _ = ks2.polygon_covering(
             rings, level=level, max_cells=65536
         )
         rows.extend((pid, int(c), bool(b)) for c, b in zip(ids, border))
-    if is_default:
-        _DEFAULT_S2_RELATION[level] = rows
     return rows
 
 
@@ -230,90 +156,31 @@ def s2_pip_join(
     lon_col: str = "lon",
     level: int | None = None,
     cell_col: str | bool | None = None,
+    how: str = "inner",
 ) -> DataFrame:
     """Point-in-polygon join through the S2 index — the flagship's
-    broadcast PIP pattern (operators/pip_join.py) with the geohash
-    covering replaced by kernels/s2.py polygon_covering.
+    broadcast PIP pattern (:func:`cell_join.broadcast_pip`) with the
+    geohash covering replaced by kernels/s2.py polygon_covering.
 
     One common cell level serves every polygon (see ``_pip_level``) so
     the probe side computes a single Arrow-batched cell key; interior
     cells accept by the covering guarantee (which matches the
     reference's fattened onSegment boundary semantics — see
     polygon_covering), border cells re-check with the exact ray-cast
-    UDF.  Output = input columns + polygon_id.
+    UDF.  how='inner' returns input columns + polygon_id;
+    'left_semi'/'left_anti' return matched/unmatched input rows in one
+    pass.
     """
     from ..fixtures import polygons_np
-    from ..functions.udfs import make_pip_udf
 
-    spark = points.sparkSession
     polys = polygons_np(polygons)
     if level is None:
         level = _pip_level(polys)
-    rows = _s2_cell_relation(polys, level, is_default=polygons is None)
-    cells = spark.createDataFrame(
-        rows, "polygon_id string, cell_key long, is_border boolean"
+    rows = default_cover(
+        polygons, ("s2", level), lambda: _s2_cell_relation(polys, level)
     )
     key = _probe_key(points, lat_col, lon_col, level, cell_col)
-    pip = make_pip_udf(polys)
-    return (
-        points.join(F.broadcast(cells), key == F.col("cell_key"), "inner")
-        .where(
-            ~F.col("is_border")
-            | pip(F.col("polygon_id"), F.col(lat_col), F.col(lon_col))
-        )
-        .drop("cell_key", "is_border")
-    )
-
-
-def s2_pip_semi_anti(
-    points: DataFrame,
-    polygons: dict[str, list] | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    level: int | None = None,
-    how: str = "left_semi",
-    cell_col: str | bool | None = None,
-) -> DataFrame:
-    """Matched/unmatched points vs the polygon set through the S2 index,
-    one pass: the covering relation is pre-grouped per cell key
-    (interior_any + border_pids) so each point meets at most one
-    broadcast row — the join cannot duplicate, no distinct(), zero
-    points-side exchanges (the same shape as the geohash semi/anti,
-    VERDICT r1 item 2)."""
-    from ..fixtures import polygons_np
-    from ..functions.udfs import make_pip_any_udf
-
-    if how not in ("left_semi", "left_anti"):
-        raise ValueError(f"unsupported how={how!r}")
-    spark = points.sparkSession
-    polys = polygons_np(polygons)
-    if level is None:
-        level = _pip_level(polys)
-    by_key: dict[int, tuple[bool, set]] = {}
-    for pid, c, b in _s2_cell_relation(polys, level, is_default=polygons is None):
-        interior_any, border_pids = by_key.setdefault(c, (False, set()))
-        if b:
-            border_pids.add(pid)
-        else:
-            interior_any = True
-        by_key[c] = (interior_any, border_pids)
-    grouped = [
-        (k, interior, sorted(border) if not interior else [])
-        for k, (interior, border) in by_key.items()
-    ]
-    cells = spark.createDataFrame(
-        grouped, "cell_key long, interior_any boolean, border_pids array<string>"
-    )
-    key = _probe_key(points, lat_col, lon_col, level, cell_col)
-    pip_any = make_pip_any_udf(polys)
-    matched = F.coalesce(
-        F.col("interior_any")
-        | pip_any(F.col("border_pids"), F.col(lat_col), F.col(lon_col)),
-        F.lit(False),
-    )
-    joined = points.join(F.broadcast(cells), key == F.col("cell_key"), "left")
-    keep = matched if how == "left_semi" else ~matched
-    return joined.where(keep).select(*points.columns)
+    return broadcast_pip(points, key, rows, polys, how, lat_col, lon_col)
 
 
 def write_s2_sorted(
@@ -466,41 +333,17 @@ def s2_pip_join_distributed(
     lat_col: str = "lat",
     lon_col: str = "lon",
     level: int = 13,
-    broadcast_polygons: bool | None = None,
     cell_col: str | bool | None = None,
 ) -> DataFrame:
     """PIP join against a polygon RELATION through the S2 index — the
-    10^5+-polygon path (S2 twin of pip_join_distributed; same staging:
-    distributed covering -> cell equi-join with AQE skew splitting ->
-    interior passes by the covering guarantee -> border rows join their
-    own rings and ray-cast in Arrow batches)."""
-    from ..functions.udfs import make_pip_rings_udf
-
+    10^5+-polygon path (S2 twin of pip_join_distributed; same staging
+    through :func:`cell_join.distributed_pip`: distributed covering ->
+    cell equi-join with AQE skew splitting -> interior passes by the
+    covering guarantee -> border rows join their own rings and ray-cast
+    in Arrow batches)."""
     cells = s2_cover_polygons_df(polygons, level=level)
     key = _probe_key(points, lat_col, lon_col, level, cell_col)
-    matched = points.join(cells, key == F.col("cell_key"), "inner").drop(
-        "cell_key"
-    )
-    interior = matched.where(~F.col("is_border")).drop("is_border")
-    rings_rel = polygons
-    if broadcast_polygons:
-        rings_rel = F.broadcast(rings_rel)
-    pip = make_pip_rings_udf()
-    border = (
-        matched.where(F.col("is_border"))
-        .drop("is_border")
-        .join(rings_rel, "polygon_id")
-        .where(
-            pip(
-                F.col("polygon_id"),
-                F.col("rings"),
-                F.col(lat_col),
-                F.col(lon_col),
-            )
-        )
-        .drop("rings")
-    )
-    return interior.unionByName(border)
+    return distributed_pip(points, key, cells, polygons, lat_col, lon_col)
 
 
 def s2_radius_join_bulk(
@@ -577,14 +420,10 @@ def s2_radius_join_bulk(
         "cell_key long",
     )
     key = _probe_key(points, lat_col, lon_col, level, cell_col)
-    dist = C.haversine(
-        F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")
-    )
     return (
-        points.join(cells, key == F.col("cell_key"), "inner")
-        .withColumn("dist_m", dist)
+        candidate_join(points, key, cells, lat_col, lon_col)
         .where(F.col("dist_m") <= F.col("radius_m"))
-        .drop("cell_key", "qlat", "qlon", "radius_m")
+        .drop("qlat", "qlon", "radius_m")
     )
 
 

@@ -199,26 +199,6 @@ def test_hex_knn_bulk_guaranteed_rows_match_brute_force(points, spark):
     assert len(qb) == 5 and qb["guaranteed"].all()
 
 
-def test_hex_pip_semi_anti_partition_points(points, spark):
-    from geogeometry_spark.operators.hex_join import (
-        hex_pip_join,
-        hex_pip_semi_anti,
-    )
-
-    df, _, _ = points
-    n = df.count()
-    semi = hex_pip_semi_anti(df, "left_semi")
-    anti = hex_pip_semi_anti(df, "left_anti")
-    n_semi, n_anti = semi.count(), anti.count()
-    assert n_semi + n_anti == n  # exact partition, no duplication
-    # semi set == distinct inner-join point set
-    inner_ids = set(
-        r["doc_id"] for r in hex_pip_join(df).select("doc_id").collect()
-    )
-    semi_ids = set(r["doc_id"] for r in semi.select("doc_id").collect())
-    assert semi_ids == inner_ids
-
-
 def test_cell_col_requires_explicit_res(points):
     df, _, _ = points
     with pytest.raises(ValueError, match="explicit res"):
@@ -253,13 +233,10 @@ def test_bulk_join_no_duplicates_at_wrapping_res(points, spark):
 
 
 def test_pip_joins_reject_cell_col_without_res(points):
-    from geogeometry_spark.operators.hex_join import (
-        hex_pip_join,
-        hex_pip_semi_anti,
-    )
+    from geogeometry_spark.operators.hex_join import hex_pip_join
 
     df, _, _ = points
     with pytest.raises(ValueError, match="explicit res"):
         hex_pip_join(df, cell_col="some_col")
     with pytest.raises(ValueError, match="explicit res"):
-        hex_pip_semi_anti(df, "left_semi", cell_col="some_col")
+        hex_pip_join(df, cell_col="some_col", how="left_semi")

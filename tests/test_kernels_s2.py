@@ -362,21 +362,6 @@ def test_s2_knn_matches_brute_force_multi_query(spark):
         assert got == exp, qid
 
 
-def test_s2_knn_fallback_when_rounds_exhausted(spark):
-    import pandas as pd
-
-    from geogeometry_spark.operators.s2_join import s2_knn
-
-    pdf = pd.DataFrame(
-        {"doc_id": [0, 1, 2], "lat": [10.0, -40.0, 60.0], "lon": [10.0, 100.0, -60.0]}
-    )
-    df = spark.createDataFrame(pdf)
-    # k > points near the query and only 1 round at 1km: global fallback
-    out = s2_knn(df, [("q", 0.0, 0.0)], k=3, r0_m=1000.0, max_rounds=1).collect()
-    assert len(out) == 3
-    assert [r.rank for r in sorted(out, key=lambda r: r.dist_m)] == [1, 2, 3]
-
-
 def test_null_and_nan_coords_yield_null_ids_not_fabricated_cells(spark):
     import pandas as pd
 
@@ -518,34 +503,6 @@ def test_multipolygon_covering_union_semantics():
     assert set(map(int, ids[~border])) == interior_union
 
 
-def test_s2_pip_semi_anti_partition_points(spark):
-    import pandas as pd
-
-    from geogeometry_spark.operators.s2_join import (
-        s2_pip_join,
-        s2_pip_semi_anti,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.arange(2000),
-            "lat": np.concatenate(
-                [RNG.uniform(52.50, 52.56, 1200), RNG.uniform(-89, 89, 800)]
-            ),
-            "lon": np.concatenate(
-                [RNG.uniform(13.37, 13.42, 1200), RNG.uniform(-180, 180, 800)]
-            ),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    semi = {r.doc_id for r in s2_pip_semi_anti(df, how="left_semi").collect()}
-    anti = {r.doc_id for r in s2_pip_semi_anti(df, how="left_anti").collect()}
-    assert semi | anti == set(pdf.doc_id)
-    assert semi & anti == set()
-    inner = {r.doc_id for r in s2_pip_join(df).select("doc_id").collect()}
-    assert semi == inner and len(inner) > 0
-
-
 def test_write_s2_sorted_prunes_directories_and_row_groups(spark, tmp_path):
     import pandas as pd
 
@@ -640,41 +597,6 @@ def test_native_encode_infinity_yields_null(spark):
         S2.s2_cell_id(F.col("lat"), F.col("lon"), 30).alias("n")
     ).collect()
     assert all(r.n is None for r in rows)
-
-
-def test_s2_pip_join_distributed_matches_broadcast_path(spark):
-    import pandas as pd
-
-    from geogeometry_spark.operators.pip_join import polygons_as_df
-    from geogeometry_spark.operators.s2_join import (
-        s2_pip_join,
-        s2_pip_join_distributed,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.arange(2000),
-            "lat": np.concatenate(
-                [RNG.uniform(52.50, 52.56, 1200), RNG.uniform(-89, 89, 800)]
-            ),
-            "lon": np.concatenate(
-                [RNG.uniform(13.37, 13.42, 1200), RNG.uniform(-180, 180, 800)]
-            ),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    polys = polygons_as_df(spark)
-    got = {
-        (r.doc_id, r.polygon_id)
-        for r in s2_pip_join_distributed(df, polys, level=13)
-        .select("doc_id", "polygon_id")
-        .collect()
-    }
-    exp = {
-        (r.doc_id, r.polygon_id)
-        for r in s2_pip_join(df).select("doc_id", "polygon_id").collect()
-    }
-    assert got == exp and len(exp) > 0
 
 
 def test_s2_radius_join_bulk_matches_brute_force(spark):

@@ -12,11 +12,16 @@ from geogeometry_spark.kernels import geohash as kgh
 from geogeometry_spark.kernels import geometry as kgeo
 from geogeometry_spark.operators import dedup, similarity
 from geogeometry_spark.operators.extract import extract_coordinates
+from geogeometry_spark.operators.hex_join import hex_pip_join
 from geogeometry_spark.operators.pip_join import pip_join
+from geogeometry_spark.operators.s2_join import s2_pip_join
 from geogeometry_spark.operators.tiling import assign_tiles
 from geogeometry_spark.sources import tables as src
 
 SF = "/root/testdata/sf0.001"
+
+# the broadcast PIP join of each cell scheme (default fixture polygons)
+PIP_JOINS = {"geohash": pip_join, "s2": s2_pip_join, "hex": hex_pip_join}
 
 
 @pytest.fixture(scope="module")
@@ -77,6 +82,23 @@ def test_semi_anti_join(spark, coords_df):
     n_anti = pip_join(coords_df, how="left_anti").count()
     assert n_semi + n_anti == n
     assert n_semi > 0
+
+
+@pytest.mark.parametrize("scheme", ["geohash", "s2", "hex"])
+def test_pip_semi_anti_partition_points(spark, coords_df, scheme):
+    """Semi and anti partition the points exactly (no duplication, no
+    loss) and the semi set equals the inner join's distinct point set,
+    for every cell scheme."""
+    join = PIP_JOINS[scheme]
+    semi = join(coords_df, how="left_semi")
+    anti = join(coords_df, how="left_anti")
+    assert semi.count() + anti.count() == coords_df.count()
+    semi_ids = {r.doc_id for r in semi.select("doc_id").collect()}
+    anti_ids = {r.doc_id for r in anti.select("doc_id").collect()}
+    assert semi_ids | anti_ids == {r.doc_id for r in coords_df.collect()}
+    assert semi_ids & anti_ids == set()
+    inner = {r.doc_id for r in join(coords_df).select("doc_id").collect()}
+    assert semi_ids == inner and len(inner) > 0
 
 
 def test_span_sequence_invariant(spark):
@@ -362,14 +384,13 @@ def test_ivf_clamps_clusters_to_sample_size(spark):
     assert len(out) == 3
 
 
-def test_pip_semi_anti_single_broadcast_exchange(spark, coords_df):
+@pytest.mark.parametrize("scheme", ["geohash", "s2", "hex"])
+def test_pip_semi_anti_single_broadcast_exchange(spark, coords_df, scheme):
     """VERDICT r1 item 2: semi/anti must be one pass — exactly one
     Exchange (the broadcast of the grouped cell relation), never a
     distinct+rejoin that re-shuffles the points side."""
-    from geogeometry_spark.operators.pip_join import pip_join
-
     for how in ("left_semi", "left_anti"):
-        plan = _executed_plan(pip_join(coords_df, how=how))
+        plan = _executed_plan(PIP_JOINS[scheme](coords_df, how=how))
         exchanges = [l for l in plan.splitlines() if "Exchange" in l]
         assert len(exchanges) == 1, plan
         assert "BroadcastExchange" in exchanges[0]
@@ -499,26 +520,64 @@ def test_knn_bulk_guaranteed_matches_exact(spark, coords_df):
     assert "hashpartitioning(query_id" in plan, plan
 
 
-def test_pip_join_distributed_matches_broadcast(spark, coords_df):
+@pytest.mark.parametrize("scheme", ["geohash", "s2"])
+def test_pip_join_distributed_matches_broadcast(spark, coords_df, scheme):
     """The polygon-relation PIP join must agree exactly with the
-    broadcast-dict pip_join on the fixture set."""
+    broadcast-dict PIP join of the same scheme on the fixture set."""
     from geogeometry_spark.operators.pip_join import (
         pip_join_distributed,
         polygons_as_df,
     )
+    from geogeometry_spark.operators.s2_join import s2_pip_join_distributed
 
+    distributed_join = {
+        "geohash": lambda df, polys: pip_join_distributed(df, polys),
+        "s2": lambda df, polys: s2_pip_join_distributed(df, polys, level=13),
+    }[scheme]
     broadcast = {
         (r["doc_id"], r["polygon_id"])
-        for r in pip_join(coords_df).select("doc_id", "polygon_id").collect()
+        for r in PIP_JOINS[scheme](coords_df)
+        .select("doc_id", "polygon_id")
+        .collect()
     }
     polys = polygons_as_df(spark)
     distributed = {
         (r["doc_id"], r["polygon_id"])
-        for r in pip_join_distributed(coords_df, polys)
+        for r in distributed_join(coords_df, polys)
         .select("doc_id", "polygon_id")
         .collect()
     }
-    assert distributed == broadcast
+    assert distributed == broadcast and len(broadcast) > 0
+
+
+@pytest.mark.parametrize("scheme", ["geohash", "s2", "hex"])
+def test_knn_fallback_when_rounds_exhausted(spark, scheme):
+    """k exceeds the points any single round can certify: the queries
+    left when the rounds run out take the exact knn_window fallback."""
+    import pandas as pd
+
+    from geogeometry_spark.operators.hex_join import hex_knn
+    from geogeometry_spark.operators.knn import knn
+    from geogeometry_spark.operators.s2_join import s2_knn
+
+    pdf = pd.DataFrame(
+        {"doc_id": [0, 1, 2], "lat": [10.0, -40.0, 60.0], "lon": [10.0, 100.0, -60.0]}
+    )
+    df = spark.createDataFrame(pdf)
+    q = [("q", 0.0, 0.0)]
+    # one round each: a 1-cell geohash ring, a 1 km S2 cap, a 2-ring hex disk
+    out = {
+        "geohash": lambda: knn(
+            df.withColumn(
+                "cell_id", C.geohash_interleaved(F.col("lat"), F.col("lon"), 12)
+            ),
+            q, k=3, max_ring=1,
+        ),
+        "s2": lambda: s2_knn(df, q, k=3, r0_m=1000.0, max_rounds=1),
+        "hex": lambda: hex_knn(df, q, k=3, max_ring=2),
+    }[scheme]().collect()
+    assert len(out) == 3
+    assert [r.rank for r in sorted(out, key=lambda r: r.dist_m)] == [1, 2, 3]
 
 
 def test_bucketed_points_join_has_no_points_side_exchange(spark, coords_df, tmp_path):

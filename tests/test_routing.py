@@ -448,3 +448,22 @@ def test_betweenness_int_ids_past_wrap_point(spark):
     got = {r["node"]: r for r in betweenness(e, src).collect()}
     # middle node lies on both source-rooted shortest-path trees
     assert got[base + 1]["bc_q"] > 0
+
+
+def test_loop_partitions_non_numeric_conf_falls_back_to_parallelism():
+    """A session whose shuffle-partition conf is not an integer ("auto"
+    on some managed platforms) sizes loops from defaultParallelism
+    instead of raising."""
+    from types import SimpleNamespace
+
+    from geogeometry_spark.operators.routing import _loop_partitions
+
+    def stub(conf_value, parallelism):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: conf_value),
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism),
+        )
+
+    assert _loop_partitions(stub("auto", 64)) == 16
+    assert _loop_partitions(stub("auto", 4)) == 8
+    assert _loop_partitions(stub("200", 4)) == 50
