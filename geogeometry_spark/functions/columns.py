@@ -15,7 +15,9 @@ Semantics parity:
 
 from __future__ import annotations
 
+import json
 import math
+from collections.abc import Callable
 from functools import lru_cache as _lru_cache
 
 from pyspark.sql import Column
@@ -511,8 +513,14 @@ def is_valid_coordinate(lat: Column, lon: Column, strict: bool = False) -> Colum
     )
 
 
+def unordered_pairs(m: Column) -> Column:
+    """m(m-1)/2 as an exact BIGINT: integer ``div`` (``/`` yields a
+    DOUBLE, which loses the exact count once m(m-1) passes 2^53)."""
+    return F.call_function("div", m * (m - F.lit(1)), F.lit(2))
+
+
 # --------------------------------------------------------------------------
-# PIP as a native expression (oracle twin of the pandas-UDF ray cast)
+# PIP as a native expression (the twin of the kernel ray cast)
 # --------------------------------------------------------------------------
 
 def _between_sql(a: str, b: str, v: str) -> str:
@@ -706,6 +714,125 @@ def pip_sql(lat: str, lon: str, ring) -> str:
         f"({bbox} AND (({vertex}) OR ({edge})"
         f" OR (({crossings}) % 2 = 1)))"
     )
+
+
+def pip_col(lat: Column, lon: Column, rings) -> Column:
+    """Native Column twin of :func:`pip_sql` for one polygon with holes
+    (``rings[0]`` outer, ``rings[1:]`` holes); see :func:`pip_index`."""
+    return pip_index(lat, lon, [rings])(F.lit(1))
+
+
+def pip_index(lat: Column, lon: Column, polygons) -> Callable[[Column], Column]:
+    """``contains(i)``: the point lies inside ``polygons[i - 1]`` (1-based
+    int Column; each polygon a list of rings, outer first) and inside
+    none of its holes (geojson.kt:187-192).  Each ring is tested with
+    :func:`pip_sql`'s terms — bbox early-out, 1e-9 vertex accept,
+    segment-bbox edge accept, eastward crossing parity
+    (GeoGeometry.kt:237-295).
+
+    The polygons ride as literal ``array<struct>`` tables (rings,
+    vertices, edges, crossing edges) that ``F.forall`` / ``F.exists`` /
+    ``F.aggregate`` slice and walk, so neither the generated code nor
+    the py4j calls that build it grow with the vertex or polygon count
+    (an unrolled pip_sql Column overflows Janino's 64 KB method limit on
+    a 16-edge set, and the stage then silently runs interpreted).  As
+    in pip_sql, degenerate and horizontal edges are dropped and lo / hi
+    / ``dy`` precomputed here in float64."""
+    verts: list[tuple] = []  # (x, y)
+    edges: list[tuple] = []  # (x1, x2, lo, hi) of non-degenerate edges
+    cross: list[tuple] = []  # (x1, x2, lo, hi, y1, dy), |dy| >= 1e-9
+    ring_rows: list[tuple] = []
+    poly_rows: list[tuple] = []
+    for rings in polygons:
+        poly_rows.append((len(ring_rows) + 1, len(rings)))
+        for k, ring in enumerate(rings):
+            pts = [(float(p[0]), float(p[1])) for p in ring]
+            if pts[0] == pts[-1]:
+                pts = pts[:-1]
+            m = len(pts)
+            ring_edges = [
+                (x1, x2, min(y1, y2), max(y1, y2), y1, y2 - y1)
+                for (x1, y1), (x2, y2) in (
+                    (pts[i], pts[(i + 1) % m]) for i in range(m)
+                )
+                if x1 != x2 or y1 != y2
+            ]
+            ring_cross = [e for e in ring_edges if abs(e[5]) >= 1e-9]
+            lats = [y for _, y in pts]
+            ring_rows.append((
+                min(lats), max(lats), k > 0,
+                len(verts) + 1, m,
+                len(edges) + 1, len(ring_edges),
+                len(cross) + 1, len(ring_cross),
+            ))
+            verts += pts
+            edges += [e[:4] for e in ring_edges]
+            cross += ring_cross
+    d, i = "double", "int"
+    V = _lit_table(verts, x=d, y=d)
+    E = _lit_table(edges, x1=d, x2=d, lo=d, hi=d)
+    X = _lit_table(cross, x1=d, x2=d, lo=d, hi=d, y1=d, dy=d)
+    R = _lit_table(
+        ring_rows, lo=d, hi=d, hole="boolean",
+        v0=i, vn=i, e0=i, en=i, c0=i, cn=i,
+    )
+    P = _lit_table(poly_rows, r0=i, rn=i)
+
+    def norm(x: Column) -> Column:  # wrapLongitude(x - lon)
+        dx = x - lon
+        return (
+            F.when(dx > 180.0, dx - 360.0)
+            .when(dx < -180.0, dx + 360.0)
+            .otherwise(dx)
+        )
+
+    def crossing(acc: Column, e: Column) -> Column:
+        n1, n2 = norm(e["x1"]), norm(e["x2"])
+        xint = n1 + (lat - e["y1"]) * (n2 - n1) / e["dy"]
+        hit = (lat > e["lo"]) & (lat <= e["hi"]) & (xint > 0.0)
+        return acc + F.when(hit, 1).otherwise(0)
+
+    def ring_contains(r: Column) -> Column:
+        vs = F.slice(V, r["v0"], r["vn"])
+        bbox = (
+            (lat >= r["lo"])
+            & (lat <= r["hi"])
+            & F.exists(vs, lambda v: norm(v["x"]) <= 0.0)
+            & F.exists(vs, lambda v: norm(v["x"]) >= 0.0)
+        )
+        vertex = F.exists(
+            vs,
+            lambda v: (F.abs(v["y"] - lat) < 1e-9) & (F.abs(v["x"] - lon) < 1e-9),
+        )
+        on_edge = F.exists(
+            F.slice(E, r["e0"], r["en"]),
+            lambda e: (F.least(norm(e["x1"]), norm(e["x2"])) <= 0.0)
+            & (F.greatest(norm(e["x1"]), norm(e["x2"])) >= 0.0)
+            & (lat >= e["lo"])
+            & (lat <= e["hi"]),
+        )
+        hits = F.aggregate(F.slice(X, r["c0"], r["cn"]), F.lit(0), crossing)
+        return bbox & (vertex | on_edge | (hits % 2 == 1))
+
+    def contains(idx: Column) -> Column:
+        p = F.element_at(P, idx)
+        return F.forall(
+            F.slice(R, p["r0"], p["rn"]),
+            lambda r: ring_contains(r) != r["hole"],
+        )
+
+    return contains
+
+
+def _lit_table(rows: list[tuple], **types: str) -> Column:
+    """Literal ``array<struct>`` of ``rows`` with fields ``types`` (name
+    -> SQL type): one JSON string that ``from_json`` parses and constant
+    folding turns into a literal — one py4j call for any row count.
+    JSON carries a float as its ``repr``, which parses back to the
+    identical double (a numeric SQL literal would parse as DECIMAL)."""
+    fields = ", ".join(f"{k}: {t}" for k, t in types.items())
+    text = json.dumps([dict(zip(types, r)) for r in rows])
+    return F.from_json(F.lit(text), f"array<struct<{fields}>>")
 
 
 # --------------------------------------------------------------------------

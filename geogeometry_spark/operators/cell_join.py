@@ -23,15 +23,21 @@ here per join shape:
   kNN / radius join);
 - :func:`radius_join_cells` / :func:`within_radius`: the single-center
   radius join tail;
-- :func:`default_cover`: one memo for the default fixture set's covers.
+- :func:`default_cover`: one memo for the default fixture set's covers;
+- :func:`local_frame`: every driver-built relation above goes to the JVM
+  as Arrow batches, so a join starts a Python worker only through a
+  Python UDF (a probe key, or distributed_pip's ray cast).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import columns as C
 
@@ -62,59 +68,111 @@ def broadcast_pip(
     [(polygon_id, cell_key, is_border)] of ``polys``.
 
     how='inner' returns input columns + polygon_id: interior-cell rows
-    match by the covering guarantee with no Python, border-cell rows
-    run the exact hole-aware ray-cast pandas UDF.  'left_semi' /
-    'left_anti' return the matched / unmatched input rows in one pass:
-    the (small, in-process) relation is pre-grouped by cell key so
-    every point meets AT MOST ONE broadcast row — the join cannot
-    duplicate, so no distinct() and no second scan or shuffle of the
-    big side.  matched = some polygon holds the whole cell
-    (interior_any) OR some border polygon contains the exact point
-    (pandas UDF over the short border-pid list)."""
-    from ..functions.udfs import make_pip_any_udf, make_pip_udf
-
+    match by the covering guarantee, border-cell rows pass the exact
+    hole-aware ray-cast of their polygon (:func:`C.pip_index`, a native
+    Column, dispatched by the polygon's index carried in the relation).
+    'left_semi' / 'left_anti' return the matched / unmatched input rows
+    in one pass: the (small, in-process) relation is pre-grouped by cell
+    key so every point meets AT MOST ONE broadcast row — the join cannot
+    duplicate, so no distinct() and no second scan or shuffle of the big
+    side.  matched = some polygon holds the whole cell (interior_any) OR
+    some polygon in the cell's border list contains the exact point."""
     spark = points.sparkSession
+    index = {pid: i for i, pid in enumerate(polys, start=1)}
     if how == "inner":
-        cells = spark.createDataFrame(
-            rows, "polygon_id string, cell_key long, is_border boolean"
+        cells = local_frame(
+            spark,
+            [(pid, k, b, index[pid]) for pid, k, b in rows],
+            "polygon_id string, cell_key long, is_border boolean, pip_idx int",
         )
-        pip = make_pip_udf(polys)
+        keep = _pip_recheck(spark, polys, how, lat_col, lon_col)
         return (
             points.join(F.broadcast(cells), key == F.col("cell_key"), "inner")
-            .where(
-                (~F.col("is_border"))
-                | pip(F.col("polygon_id"), F.col(lat_col), F.col(lon_col))
-            )
-            .drop("cell_key", "is_border")
+            .where(keep)
+            .drop("cell_key", "is_border", "pip_idx")
         )
     if how not in ("left_semi", "left_anti"):
         raise ValueError(f"unsupported how={how!r}")
-    by_key: dict[int, tuple[bool, set[str]]] = {}
+    by_key: dict[int, tuple[bool, set[int]]] = {}
     for pid, cell_key, is_border in rows:
         interior_any, border = by_key.setdefault(cell_key, (False, set()))
         if is_border:
-            border.add(pid)
+            border.add(index[pid])
         else:
             interior_any = True
         by_key[cell_key] = (interior_any, border)
     grouped = [
         # polygons with an interior cell here match outright; border
-        # pids only matter when no interior polygon already matched
+        # polygons only matter when no interior polygon already matched
         (k, interior, sorted(border) if not interior else [])
         for k, (interior, border) in by_key.items()
     ]
-    cells_g = spark.createDataFrame(
-        grouped, "cell_key long, interior_any boolean, border_pids array<string>"
+    cells_g = local_frame(
+        spark,
+        grouped,
+        "cell_key long, interior_any boolean, border_idx array<int>",
     )
-    pip_any = make_pip_any_udf(polys)
-    matched = F.coalesce(
-        F.col("interior_any")
-        | pip_any(F.col("border_pids"), F.col(lat_col), F.col(lon_col)),
-        F.lit(False),
-    )
+    matched = _pip_recheck(spark, polys, how, lat_col, lon_col)
     joined = points.join(F.broadcast(cells_g), key == F.col("cell_key"), "left")
     keep = matched if how == "left_semi" else ~matched
     return joined.where(keep).select(*points.columns)
+
+
+_PIP_RECHECKS: dict[tuple, tuple[object, Column]] = {}
+
+
+def _pip_recheck(
+    spark, polys: dict[str, list], how: str, lat_col: str, lon_col: str
+) -> Column:
+    """The border recheck of :func:`broadcast_pip`, built once per
+    (polygon set, inner or semi/anti, columns) and reused: building it
+    takes about a thousand py4j calls (0.1-0.4 s).  A memo entry made
+    under another Spark gateway (a restarted JVM) is rebuilt, never
+    reused.
+
+    inner: ``NOT is_border OR contains(pip_idx)``; semi/anti:
+    ``coalesce(interior_any OR exists(border_idx, contains), false)``.
+    Either way the exact test runs only on border rows."""
+    gateway = spark.sparkContext._gateway
+    key = (
+        how == "inner",
+        lat_col,
+        lon_col,
+        tuple(
+            (pid, tuple(np.asarray(r, dtype=np.float64).tobytes() for r in rings))
+            for pid, rings in polys.items()
+        ),
+    )
+    hit = _PIP_RECHECKS.get(key)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
+    contains = C.pip_index(F.col(lat_col), F.col(lon_col), list(polys.values()))
+    if how == "inner":
+        col = ~F.col("is_border") | contains(F.col("pip_idx"))
+    else:
+        col = F.coalesce(
+            F.col("interior_any") | F.exists("border_idx", contains), F.lit(False)
+        )
+    if len(_PIP_RECHECKS) >= 16:
+        _PIP_RECHECKS.pop(next(iter(_PIP_RECHECKS)))
+    _PIP_RECHECKS[key] = (gateway, col)
+    return col
+
+
+def local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` (tuples in the field order of the DDL ``schema``) as a
+    DataFrame built from pandas through Arrow
+    (``spark.sql.execution.arrow.pyspark.enabled``, set by
+    :func:`plans.session.get_spark`): the JVM decodes the record
+    batches, so using the frame starts no Python worker —
+    ``spark.createDataFrame(list)`` pickles through a Python map."""
+    struct = StructType.fromDDL(schema)
+    if not rows:  # an empty pandas frame would take the pickling path
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in struct]
+        )
+    pdf = pd.DataFrame.from_records(rows, columns=struct.fieldNames())
+    return spark.createDataFrame(pdf, struct)
 
 
 def distributed_pip(
@@ -200,8 +258,8 @@ def knn_rounds(
         for qid, qlat, qlon in pending:
             cells, certified[qid] = cover(qlat, qlon)
             rel.extend((qid, qlat, qlon, int(c)) for c in cells)
-        cells_df = spark.createDataFrame(
-            rel, "query_id string, qlat double, qlon double, cell_key long"
+        cells_df = local_frame(
+            spark, rel, "query_id string, qlat double, qlon double, cell_key long"
         )
         cand = candidate_join(
             points, key, F.broadcast(cells_df), lat_col, lon_col
@@ -241,7 +299,7 @@ def knn_rounds(
             for c in points.columns
         ]
     )
-    return spark.createDataFrame(results, schema_cols)
+    return local_frame(spark, results, schema_cols)
 
 
 def candidate_join(
@@ -311,7 +369,7 @@ def radius_join_cells(
     exact :func:`within_radius` tail.  Output = input columns +
     dist_m."""
     spark = points.sparkSession
-    cells_df = spark.createDataFrame([(int(c),) for c in cells], "cell_key long")
+    cells_df = local_frame(spark, [(int(c),) for c in cells], "cell_key long")
     candidates = points.join(
         F.broadcast(cells_df), key == F.col("cell_key"), "inner"
     ).drop("cell_key")

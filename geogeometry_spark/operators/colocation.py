@@ -340,10 +340,7 @@ def knox_test(
     ).localCheckpoint()
     srow = reps.agg(
         F.sum("_m"),
-        # m(m-1) is even: per-row exact long division, BIGINT shuffle
-        F.sum(
-            (F.col("_m") * (F.col("_m") - F.lit(1)) / F.lit(2)).cast("long")
-        ),
+        F.sum(C.unordered_pairs(F.col("_m"))),
     ).first()
     n = int(srow[0] or 0)
     self_pairs = int(srow[1] or 0)

@@ -250,13 +250,9 @@ def ripley_k(
     # scalar aggregates (2 numbers): total points, within-rep pairs
     srow = reps.agg(
         F.sum("_m"),
-        # per-row long BEFORE the sum: m(m-1) is even so the division
-        # is exact, and the shuffle then carries only exact BIGINTs
-        F.sum(
-            (F.col("_m") * (F.col("_m") - F.lit(1)) / F.lit(2)).cast(
-                "long"
-            )
-        ),
+        # per-row BIGINT before the sum: the shuffle carries only
+        # exact BIGINTs
+        F.sum(C.unordered_pairs(F.col("_m"))),
     ).first()
     n_pts = int(srow[0] or 0)
     self_pairs = int(srow[1] or 0)
@@ -688,13 +684,9 @@ def variogram(
     ).localCheckpoint()
 
     # within-rep pairs: distance 0, difference 0 — they raise N(h) of
-    # bin 0 but never the numerator; m(m-1) is even so /2 is exact
+    # bin 0 but never the numerator
     srow = reps.agg(
-        F.sum(
-            (F.col("_m") * (F.col("_m") - F.lit(1)) / F.lit(2)).cast(
-                "long"
-            )
-        )
+        F.sum(C.unordered_pairs(F.col("_m")))
     ).first()
     self_pairs = int(srow[0] or 0)
 

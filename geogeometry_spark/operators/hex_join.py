@@ -419,10 +419,9 @@ def hex_pip_join(
        correctness never depends on res);
     3. points keyed by the Arrow kernel cell (hot-path posture of
        :func:`_hex_key`), ONE broadcast hash equi-join;
-    4. interior-cell rows match with no Python; border-cell rows run
-       the exact hole-aware ray-cast pandas UDF — the same exactness
-       contract as the other two families, so all three share the PIP
-       oracle.
+    4. interior-cell rows match outright; border-cell rows run the
+       exact hole-aware ray-cast Column — the same exactness contract
+       as the other two families, so all three share the PIP oracle.
 
     how='inner' returns input columns + polygon_id;
     'left_semi'/'left_anti' return matched/unmatched input rows in one

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions import columns as C
 from ..kernels import geohash as kgh
 from ..kernels import geometry as kgeo
-from .cell_join import candidate_join, knn_rounds, top_k
+from .cell_join import candidate_join, knn_rounds, local_frame, top_k
 
 
 def _ring_cells(center_cell: str, radius: int) -> set[str]:
@@ -275,7 +275,7 @@ def knn_window(
     """Exact kNN by window top-k (no pruning) — the oracle-shaped
     formulation and the correctness baseline for :func:`knn`."""
     spark = points.sparkSession
-    qdf = spark.createDataFrame(queries, "query_id string, qlat double, qlon double")
+    qdf = local_frame(spark, queries, "query_id string, qlat double, qlon double")
     dist = C.haversine(F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon"))
     cand = points.crossJoin(F.broadcast(qdf)).withColumn("dist_m", dist)
     return top_k(cand, k, points.columns[0]).drop("qlat", "qlon")

@@ -14,9 +14,9 @@ Plan shape (SURVEY.md §2.8):
 3. points carry cell_id = 60-bit interleaved geohash (native Column
    math); the join key is shiftright(cell_id, 5*(12-L)).
 4. broadcast-join; interior-cell rows match immediately; border-cell
-   rows run the exact hole-aware ray-cast pandas UDF
-   (GeoGeometry.kt:237-295) — Python cost is paid ONLY on the border
-   fraction.
+   rows pass the exact hole-aware ray-cast (GeoGeometry.kt:237-295) as
+   a native Column (functions.columns.pip_index) — its cost is paid
+   ONLY on the border fraction, and no Python worker runs.
 
 At 100 TB the big side is scanned once, filtered by the (broadcastable,
 few-thousand-row) cell relation, and never shuffled.

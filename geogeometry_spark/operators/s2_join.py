@@ -167,7 +167,7 @@ def s2_pip_join(
     cells accept by the covering guarantee (which matches the
     reference's fattened onSegment boundary semantics — see
     polygon_covering), border cells re-check with the exact ray-cast
-    UDF.  how='inner' returns input columns + polygon_id;
+    Column.  how='inner' returns input columns + polygon_id;
     'left_semi'/'left_anti' return matched/unmatched input rows in one
     pass.
     """

@@ -1278,6 +1278,18 @@ class TestKnox:
         # E = 3*3/6 = 1.5
         assert r["e_x_r6"] == 1.5
 
+    def test_self_pair_count_exact_past_2_53(self, spark):
+        """A (µlat, µlon, ts) rep holding m points contributes m(m-1)/2
+        self-pairs.  At m = 3e9, m(m-1) passes 2^53: DOUBLE division
+        lands 256 short of the exact BIGINT the DuckDB twin sums."""
+        from pyspark.sql import functions as F
+
+        from geogeometry_spark.functions.columns import unordered_pairs
+
+        one = spark.range(1).select(F.lit(3_000_000_000).alias("_m"))
+        got = one.select(unordered_pairs(F.col("_m"))).first()[0]
+        assert got == 4_499_999_998_500_000_000
+
     def test_interaction_positive_z(self, spark):
         from geogeometry_spark.operators.colocation import knox_test
 
