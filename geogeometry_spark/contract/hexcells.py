@@ -23,14 +23,15 @@ def q_hex_encode(spark, sf_dir):
     Python; the oracle recomputes the identical fixed-order float64
     chain in DuckDB so the cell ASSIGNMENT (not a rounded value) is
     hash-checked cross-engine."""
-    df = _docs_coords(spark, sf_dir)
-    h12 = HX.hex_cell(F.col("lat"), F.col("lon"), 12)
-    return df.select(
+    df = _docs_coords(spark, sf_dir).select(
         "doc_id",
-        h12.alias("hex12"),
+        HX.hex_cell(F.col("lat"), F.col("lon"), 12).alias("hex12"),
         HX.hex_cell(F.col("lat"), F.col("lon"), 7).alias("hex7"),
-        HX.hex_parent(h12, 12).alias("hex11p"),
     )
+    # the parent reads hex12 from its own Project: inlined, its ~20
+    # references to the cell would copy the whole encode tree each time
+    # (a ~600 KB plan)
+    return df.withColumn("hex11p", HX.hex_parent(F.col("hex12"), 12))
 
 
 def _hex_encode_oracle() -> str:
@@ -240,14 +241,13 @@ def q_hex_adversarial(spark, sf_dir):
     lat_p = F.greatest(
         F.lit(-89.999), F.least(F.lit(89.999), F.col("lat") * F.lit(1.0588))
     )
-    df = df.select("doc_id", lat_p.alias("alat"), lon_s.alias("alon"))
-    h9 = HX.hex_cell(F.col("alat"), F.col("alon"), 9)
-    return df.select(
+    df = df.select("doc_id", lat_p.alias("alat"), lon_s.alias("alon")).select(
         "doc_id",
-        h9.alias("hex9"),
+        HX.hex_cell(F.col("alat"), F.col("alon"), 9).alias("hex9"),
         HX.hex_cell(F.col("alat"), F.col("alon"), 4).alias("hex4"),
-        HX.hex_parent(h9, 9).alias("hex8p"),
     )
+    # the parent reads hex9 from its own Project (see q_hex_encode)
+    return df.withColumn("hex8p", HX.hex_parent(F.col("hex9"), 9))
 
 
 def _hex_adversarial_oracle() -> str:

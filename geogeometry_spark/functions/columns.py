@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import math
 from collections.abc import Callable
-from functools import lru_cache as _lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,7 +38,8 @@ _SPREAD_MASKS = (
     (1, 0x5555555555555555),
 )
 
-_SPREAD_CHUNK_BITS = 15
+_SPREAD_CHUNK_BITS = 8
+_SPREAD_MAX_BITS = 30  # the widest caller: 12-char geohash longitude
 
 
 def _spread_int(v: int) -> int:
@@ -48,17 +48,26 @@ def _spread_int(v: int) -> int:
     return v
 
 
-@_lru_cache(maxsize=1)
 def _spread_table() -> Column:
-    """32768-entry array literal: spread_table[v] = v's 15 bits spread to
-    even bit positions.  Replaces the shift/mask cascade whose expression
-    tree doubled at every step (5 steps x 2 refs = 32x subtree
-    duplication, blowing the janino 64KB method limit on 12-char cells).
-    Built as split(string-literal) so it is ONE plan node (F.lit(list)
-    creates a 32768-child CreateArray — ~16s of Catalyst traversal per
-    query); ConstantFolding collapses it to a flat ArrayData literal."""
-    csv = ",".join(str(_spread_int(v)) for v in range(1 << _SPREAD_CHUNK_BITS))
-    return F.split(F.lit(csv), ",").cast("array<bigint>")
+    """256-entry ``array<bigint>``: table[v] = v's 8 bits spread to even
+    bit positions.
+
+    It replaces the shift/mask cascade, whose expression tree doubled at
+    every step and blew janino's 64KB method limit on 12-char cells.
+    ``array(...)`` of literals is non-null all the way down
+    (``containsNull=false``), so under ANSI (the Spark 4 default) an
+    index into it is non-nullable and adds no nullability to
+    ``geohash_interleaved`` or ``quadkey_long``.  That matters for
+    joins on a cell key:
+    Catalyst infers ``isnotnull(key)`` for a nullable join key and
+    pushes that filter below the Projects by copying the key's whole
+    expression (coordinate parse included), so each row would compute
+    the key twice.  At 256 entries the folded literal is ~1.4 KB of
+    plan text and of each task binary.  One SQL-parsed expression is
+    one plan node and one py4j call; it is rebuilt per call rather than
+    cached because a Column is bound to the JVM that made it."""
+    vals = ",".join(f"{_spread_int(v)}L" for v in range(1 << _SPREAD_CHUNK_BITS))
+    return F.expr(f"array({vals})")
 
 
 # --------------------------------------------------------------------------
@@ -74,28 +83,31 @@ def _cell_index(value: Column, lo: float, span: float, bits: int) -> Column:
 
 
 def _spread(c: Column, bits: int = 30) -> Column:
-    """Spread ``bits`` low bits of ``c`` to even bit positions via the
-    constant lookup table (one or two O(1) array gets — no subtree
-    duplication, tiny codegen).  The two-chunk lookup covers at most
-    2*15 bits; values beyond that would silently index past the table
-    (element_at -> NULL), so larger widths are rejected outright."""
-    if bits > 2 * _SPREAD_CHUNK_BITS:
+    """Spread the ``bits`` low bits of the bigint ``c`` to even bit
+    positions: one lookup in :func:`_spread_table` per 8-bit chunk, ORed
+    together (no subtree duplication, tiny codegen).  The top chunk is
+    not masked, so a value wider than its chunk indexes past the table
+    and fails under ANSI instead of being truncated.  Widths above 30
+    bits are rejected: no caller needs them.  Built from ``F.*`` calls
+    where a Column operator would do the same, since each Column
+    operator costs several py4j round trips at plan-build time."""
+    if bits > _SPREAD_MAX_BITS:
         raise ValueError(
-            f"_spread supports at most {2 * _SPREAD_CHUNK_BITS} bits, got {bits}"
+            f"_spread supports at most {_SPREAD_MAX_BITS} bits, got {bits}"
         )
-    if bits <= _SPREAD_CHUNK_BITS:
-        return F.element_at(_spread_table(), (c + F.lit(1)).cast("int")).cast("long")
-    lo = F.element_at(
-        _spread_table(),
-        (c.bitwiseAND(F.lit((1 << _SPREAD_CHUNK_BITS) - 1)) + F.lit(1)).cast("int"),
-    ).cast("long")
-    hi = F.element_at(
-        _spread_table(),
-        (F.shiftright(c, _SPREAD_CHUNK_BITS) + F.lit(1)).cast("int"),
-    ).cast("long")
-    return lo.bitwiseOR(F.shiftleft(hi, 2 * _SPREAD_CHUNK_BITS))
-
-
+    table = _spread_table()
+    top = 64 - _SPREAD_CHUNK_BITS
+    out = None
+    for shift in range(0, max(bits, 1), _SPREAD_CHUNK_BITS):
+        if shift + _SPREAD_CHUNK_BITS < bits:  # bits shift..shift+7 only
+            chunk = F.shiftrightunsigned(F.shiftleft(c, top - shift), top)
+        else:
+            chunk = F.shiftright(c, shift) if shift else c
+        part = table[chunk]
+        if shift:
+            part = F.shiftleft(part, 2 * shift)
+        out = part if out is None else out.bitwiseOR(part)
+    return out
 
 
 def cell_bits(length: int) -> tuple[int, int]:

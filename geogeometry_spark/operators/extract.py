@@ -4,8 +4,9 @@ The span->geometry bridge (BASELINE.json north_star: "extracting
 coordinates from spans").  Hot path is Spark-native: the reference's
 lookaround regex (GeoGeometry.kt:1517-1531) runs in the JVM via
 regexp_extract_all (Java regex supports the lookbehind/lookahead), so no
-Python executes per row.  The pandas-UDF variant (functions.udfs.
-extract_coords) exists for parity testing.
+Python executes per row, and the regex runs once per text span.  The
+pandas-UDF variant (functions.udfs.extract_coords) exists for parity
+testing.
 
 Row invariant: ``spans`` is selected through untouched — every output
 row carries the original span sequence (kind, text, media_ref, order).
@@ -28,9 +29,10 @@ def extract_coordinates(
     """docs(doc_id, spans) -> one row per extracted coordinate:
     (doc_id, span_idx, lat, lon [, spans]).
 
-    Only 'text' spans are scanned; lat/lon parse via the reference regex
-    with both groups extracted in a single pass (extract group 0 then
-    split on the comma — one regex evaluation per span, not two).
+    Only 'text' spans are scanned, and each runs the reference regex
+    exactly once: group 0 of every match is extracted in one
+    ``regexp_extract_all`` pass, exploded in the same select, and split
+    on the comma into lat/lon (one split per coordinate).
     ``one_per_doc`` keeps just the first coordinate of the first
     matching span (the flagship's document->location mapping).
     """
@@ -44,14 +46,17 @@ def extract_coordinates(
     # on coordinate-free spans entirely (measured: -30% extraction wall
     # at 5M docs — ~40% of spans carry no coordinate)
     spans = spans.where(F.instr(F.col("span.text"), ",") > 0)
-    matches = spans.withColumn(
-        "m", F.regexp_extract_all(F.col("span.text"), F.lit(_PATTERN), 0)
-    ).where(F.size("m") > 0)
-    exploded = matches.select(
+    # explode the regex call itself (explode drops empty and null
+    # arrays): a filter on an aliased match array, written or inferred
+    # by InferFiltersFromGenerate, is pushed below the Project by
+    # copying the regex into it, one more regex run per row per filter
+    exploded = spans.select(
         "doc_id",
         *(["spans"] if keep_spans else []),
         "span_idx",
-        F.explode("m").alias("pair"),
+        F.explode(
+            F.regexp_extract_all(F.col("span.text"), F.lit(_PATTERN), 0)
+        ).alias("pair"),
     )
     parts = F.split(F.trim(F.col("pair")), r"\s*,\s*")
     out = exploded.select(

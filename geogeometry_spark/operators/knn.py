@@ -136,9 +136,8 @@ def _ring_cells_col(
     qia, qio = C.cell_indices(F.col("qlat"), F.col("qlon"), precision)
     # explode the (di, dj) offsets FIRST, then interleave once per row:
     # building a (2*ring+1)^2 array of interleave expressions instead
-    # would inline that many copies of the 32k-entry spread lookup
-    # table into the plan (~200 KB of constant each — measured 7x
-    # slower at ring=2)
+    # would inline that many copies of the whole interleave expression
+    # into the plan
     x = q.select("*", qia.alias("_qia"), qio.alias("_qio"))
     x = x.select("*", F.explode(F.sequence(lo, hi)).alias("_di"))
     x = x.select("*", F.explode(F.sequence(lo, hi)).alias("_dj"))

@@ -9,8 +9,15 @@ scan interleaved span documents
   -> tile assignment at zooms {8, 12, 16, 22}
   -> per-row output preserving the span sequence untouched.
 
-The whole pipeline is one whole-stage-codegen stage with no Python
-worker; the big side is scanned once and never shuffled.
+The whole pipeline is one Spark stage with no Python worker; the big
+side is scanned once and never shuffled.  Each row evaluates every
+expensive expression once: the coordinate regex once per text span,
+the comma split and the two cell indices once per coordinate.  Two
+things keep Catalyst from copying them into inferred filters: the
+extraction explodes the regex call directly (no filter on an aliased
+match array), and ``geohash_interleaved`` is non-nullable (no
+``isnotnull(cell_id)`` for the join key).
+tests/test_plan_shape.py pins this down.
 
 Covering resolution: max_length=7 measured fastest end-to-end at sf0.1
 x1000 (6.8s vs 9.4s at 6, 8.2s at 8 on local[32]) — finer cells shrink

@@ -11,7 +11,10 @@ plan for the patterns that killed operators in the round-1 verdict:
   without a partition expression) — the single-partition global sort the
   judge flagged in the r1 ANN family;
 - global ``Sort [...] true`` feeding anything other than
-  ``TakeOrderedAndProject`` / an explicit output ordering.
+  ``TakeOrderedAndProject`` / an explicit output ordering;
+- ``huge_plan`` — a formatted physical plan over 256 KiB.  A plan that
+  size almost always inlines a large literal (a lookup table, a ring
+  list) that is also serialized into every task binary.
 
 Exit code is non-zero if any query trips a pattern that is not in the
 allowlist, so this can run as a gate.  A summary table is printed for
@@ -81,6 +84,9 @@ PATTERNS = {
     ),
 }
 
+# Formatted physical plans above this many bytes trip ``huge_plan``.
+HUGE_PLAN_BYTES = 256 * 1024
+
 
 def audit(name: str, df, verbose: bool) -> list[str]:
     try:
@@ -92,13 +98,15 @@ def audit(name: str, df, verbose: bool) -> list[str]:
     except Exception:
         # fallback: simple string plan
         plan = df._jdf.queryExecution().simpleString()
+    found = [key for key, rx in PATTERNS.items() if rx.search(plan)]
+    if len(plan.encode("utf-8")) > HUGE_PLAN_BYTES:
+        found.append("huge_plan")
     hits = []
-    for key, rx in PATTERNS.items():
-        if rx.search(plan):
-            if (name, key) in ALLOWLIST:
-                hits.append(f"{key} (allowed: {ALLOWLIST[(name, key)]})")
-            else:
-                hits.append(f"{key} <== VIOLATION")
+    for key in found:
+        if (name, key) in ALLOWLIST:
+            hits.append(f"{key} (allowed: {ALLOWLIST[(name, key)]})")
+        else:
+            hits.append(f"{key} <== VIOLATION")
     if verbose and hits:
         print(plan)
     return hits
