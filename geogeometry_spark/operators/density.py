@@ -15,31 +15,25 @@ pattern analysis:
   within r of a typical point, scaled by intensity; the L(r) - r
   transform makes clustering (>0) vs dispersion (<0) readable.
 
-Scale design (the hotspot.py / cluster.py doctrine):
+Scale design: operators/lattice.py (occupied cells, the neighbor
+spread, coincident-point representatives and their candidate pairs).
+What is particular to these statistics:
 
-- KDE: points collapse ONCE to occupied cells (map-side combinable
-  count), each occupied cell explodes to its truncated kernel stencil
-  (bounded |stencil| x blowup of the CELL relation, never the point
-  relation), one re-aggregation yields the surface.  Kernel weights
-  are computed driver-side in Python, quantized to BIGINT parts-per-
-  1e9, and enter both engines as identical integer literals — every
-  shuffled value is an exact BIGINT, so partial-agg order cannot move
-  the result and the DuckDB twin matches bit-for-bit.  (Integer
-  headroom: sum(count * w_q) overflows int64 only past ~9e9 points
-  per stencil footprint; at that density rescale ``weight_scale``.)
-- Ripley's K: coincident fixes collapse to one representative with a
-  multiplicity (the parked-user clique becomes ONE node — dedup-
-  before-MinHash doctrine), reps bucket into WebMercator cells at the
-  finest zoom whose ground size is >= max(radii) in the study band,
-  and the 9-neighborhood equi-join bounds candidate pairs by cell
-  co-location — never all-pairs, in EITHER engine (the DuckDB twin
-  runs the identical grid join, so the oracle stays tractable at
-  sweep scale).  Forward-neighbor halving ships 5/9 of the naive
-  spread (each unordered cell pair probed from exactly one side —
-  the grid_dbscan trick).  Pair counts per radius are exact BIGINTs
-  from ONE distance evaluation (conditional sums over the mm-
-  quantized geodesic distance); K/L floats are computed from those
-  integers in a pinned IEEE op order mirrored literally by the twin.
+- KDE: kernel weights are computed driver-side in Python, quantized to
+  BIGINT parts-per-1e9, and enter both engines as identical integer
+  literals — every shuffled value is an exact BIGINT, so partial-agg
+  order cannot move the result and the DuckDB twin matches
+  bit-for-bit.  (Integer headroom: sum(count * w_q) overflows int64
+  only past ~9e9 points per stencil footprint; at that density rescale
+  ``weight_scale``.)
+- Ripley's K: reps bucket into cells at the finest zoom whose ground
+  size is >= max(radii) in the study band, so the 3x3 neighborhood
+  bounds candidate pairs — never all-pairs, in EITHER engine (the
+  DuckDB twin runs the identical grid join, so the oracle stays
+  tractable at sweep scale).  Pair counts per radius are exact BIGINTs
+  from ONE distance evaluation (conditional sums over the mm-quantized
+  geodesic distance); K/L floats are computed from those integers in a
+  pinned IEEE op order mirrored literally by the twin.
 
 No edge correction is applied (the naive / "uncorrected" estimator):
 at engine scale the study area is data-defined and border effects are
@@ -55,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
+from . import lattice as L
 from .cluster import dbscan_zoom_for_eps
 
 __all__ = [
@@ -102,6 +97,19 @@ def _kde_stencil(
     return out
 
 
+def _pair_zoom(r_m: float, max_abs_lat: float) -> int:
+    """The finest zoom whose cells span ``r_m`` metres in the study band,
+    so every pair within ``r_m`` meets in a 3x3 neighborhood; below
+    zoom 2 that neighborhood is the whole planet."""
+    zoom = dbscan_zoom_for_eps(r_m, max_abs_lat)
+    if zoom < 2:
+        raise ValueError(
+            f"{r_m} m needs zoom {zoom} (< 2): planetary-scale distances "
+            "degenerate to all-pairs; use a smaller radius or lag."
+        )
+    return zoom
+
+
 def kde_grid(
     points: DataFrame,
     zoom: int = 8,
@@ -121,34 +129,16 @@ def kde_grid(
     decimals (density_q / weight_scale).  x wraps modulo 2^zoom
     (antimeridian adjacency); y addresses off the pole edges are
     dropped (no such tile exists)."""
-    n_tiles = 1 << zoom
     stencil = _kde_stencil(radius_cells, sigma_cells, weight_scale)
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(w).alias("w"),
-            )
-            for dx, dy, w in stencil
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        (F.col("cnt") * F.col("_o.w")).alias("mass"),
-    )
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
     out = (
-        spread.where(
-            (F.col("ny") >= 0) & (F.col("ny") < F.lit(n_tiles))
+        L.spread(
+            cells,
+            zoom,
+            [{"dx": dx, "dy": dy, "w": w} for dx, dy, w in stencil],
+            (F.col("cnt") * F.col("_o.w")).alias("mass"),
         )
-        .groupBy(
-            F.col("nx").alias("tx"), F.col("ny").alias("ty")
-        )
+        .groupBy(F.col("nx").alias("tx"), F.col("ny").alias("ty"))
         .agg(
             F.count(F.lit(1)).alias("src_cells"),
             F.sum("mass").alias("density_q"),
@@ -221,90 +211,24 @@ def ripley_k(
         raise ValueError("radii_m must be non-empty")
     radii = sorted(float(r) for r in radii_m)
     r_max = radii[-1]
-    zoom = dbscan_zoom_for_eps(r_max, max_abs_lat)
-    if zoom < 2:
-        raise ValueError(
-            f"max radius {r_max} m needs zoom {zoom} (< 2): planetary-"
-            "scale radii degenerate to all-pairs; reduce the ladder."
-        )
-    n_tiles = 1 << zoom
+    zoom = _pair_zoom(r_max, max_abs_lat)
     r_mm = [round(r * 1000.0) for r in radii]
-
-    ula = F.round(F.col(lat_col) * F.lit(1e6)).cast("long")
-    ulo = F.round(F.col(lon_col) * F.lit(1e6)).cast("long")
-    keyed = points.where(
-        F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull()
-    ).withColumns({"_ula": ula, "_ulo": ulo})
-    reps = keyed.groupBy("_ula", "_ulo").agg(
-        F.min(id_col).alias("_pos"), F.count(F.lit(1)).alias("_m")
-    )
-    rlat = F.col("_ula").cast("double") / F.lit(1e6)
-    rlon = F.col("_ulo").cast("double") / F.lit(1e6)
-    tx, ty = C.tile_xy(rlat, rlon, zoom)
-    reps = reps.select(
-        "_pos", "_m",
-        rlat.alias("_rlat"), rlon.alias("_rlon"),
-        tx.alias("_tx"), ty.alias("_ty"),
-    ).localCheckpoint()
+    reps = L.coincident_reps(points, zoom, id_col, lat_col, lon_col)
 
     # scalar aggregates (2 numbers): total points, within-rep pairs
     srow = reps.agg(
-        F.sum("_m"),
+        F.sum("m"),
         # per-row BIGINT before the sum: the shuffle carries only
         # exact BIGINTs
-        F.sum(C.unordered_pairs(F.col("_m"))),
+        F.sum(C.unordered_pairs(F.col("m"))),
     ).first()
     n_pts = int(srow[0] or 0)
     self_pairs = int(srow[1] or 0)
 
-    # forward-neighbor halving (grid_dbscan's trick): each unordered
-    # cell pair probed from exactly ONE side, ties within a cell broken
-    # by rep position order — the pair SET is identical to the naive
+    # forward-neighbor halving: the pair SET is identical to the naive
     # 3x3 spread, at 5/9 of the shuffle
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(dx == 0 and dy == 0).alias("same"),
-            )
-            for dx, dy in ((0, 0), (1, 0), (1, 1), (0, 1), (-1, 1))
-        ]
-    )
-    probe = reps.withColumn("_o", F.explode(offs)).select(
-        F.col("_pos").alias("_pa"),
-        F.col("_m").alias("_ma"),
-        F.col("_rlat").alias("_lata"),
-        F.col("_rlon").alias("_lona"),
-        F.col("_o.same").alias("_same"),
-        F.pmod(F.col("_tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("_nx"),
-        (F.col("_ty") + F.col("_o.dy")).alias("_ny"),
-    )
-    build = reps.select(
-        F.col("_pos").alias("_pb"),
-        F.col("_m").alias("_mb"),
-        F.col("_rlat").alias("_latb"),
-        F.col("_rlon").alias("_lonb"),
-        F.col("_tx").alias("_nx"),
-        F.col("_ty").alias("_ny"),
-    )
-    dist_mm = F.round(
-        C.haversine(
-            F.col("_lata"), F.col("_lona"), F.col("_latb"), F.col("_lonb")
-        )
-        * F.lit(1000.0)
-    ).cast("long")
-    pair_ok = F.when(F.col("_same"), F.col("_pa") < F.col("_pb")).otherwise(
-        F.col("_pa") != F.col("_pb")
-    )
-    cand = (
-        probe.join(build, ["_nx", "_ny"])
-        .where(pair_ok)
-        .select(
-            (F.col("_ma") * F.col("_mb")).alias("_w"),
-            dist_mm.alias("_d"),
-        )
-        .where(F.col("_d") <= F.lit(r_mm[-1]))
+    cand = L.rep_pairs(reps, reps, zoom, L.HALF_PROBE, r_mm[-1]).select(
+        (F.col("m_a") * F.col("m_b")).alias("_w"), F.col("dist_mm").alias("_d")
     )
     crow = cand.agg(
         *[
@@ -447,82 +371,24 @@ def clark_evans(
     Returns one row: (n_points, n_included, n_censored, mean_nn_r3,
     r_index_r6, z_r6); statistic NULL when undefined (no included
     points or zero area)."""
-    zoom = dbscan_zoom_for_eps(float(r_max_m), max_abs_lat)
-    if zoom < 2:
-        raise ValueError(
-            f"r_max {r_max_m} m needs zoom {zoom} (< 2): planetary "
-            "search radii degenerate to all-pairs; reduce r_max."
-        )
-    n_tiles = 1 << zoom
+    zoom = _pair_zoom(float(r_max_m), max_abs_lat)
     r_mm = round(float(r_max_m) * 1000.0)
-
-    ula = F.round(F.col(lat_col) * F.lit(1e6)).cast("long")
-    ulo = F.round(F.col(lon_col) * F.lit(1e6)).cast("long")
-    keyed = points.where(
-        F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull()
-    ).withColumns({"_ula": ula, "_ulo": ulo})
-    reps = keyed.groupBy("_ula", "_ulo").agg(
-        F.min(id_col).alias("_pos"), F.count(F.lit(1)).alias("_m")
-    )
-    rlat = F.col("_ula").cast("double") / F.lit(1e6)
-    rlon = F.col("_ulo").cast("double") / F.lit(1e6)
-    tx, ty = C.tile_xy(rlat, rlon, zoom)
-    reps = reps.select(
-        "_pos", "_m",
-        rlat.alias("_rlat"), rlon.alias("_rlon"),
-        tx.alias("_tx"), ty.alias("_ty"),
-    ).localCheckpoint()
+    reps = L.coincident_reps(points, zoom, id_col, lat_col, lon_col)
 
     srow = reps.agg(
-        F.sum("_m"),
-        F.sum(F.when(F.col("_m") >= 2, F.col("_m"))),
-        F.sum(F.when(F.col("_m") == 1, F.lit(1))),
+        F.sum("m"),
+        F.sum(F.when(F.col("m") >= 2, F.col("m"))),
+        F.sum(F.when(F.col("m") == 1, F.lit(1))),
     ).first()
     n_total = int(srow[0] or 0)
     n_coinc = int(srow[1] or 0)  # points with a coincident partner: NN = 0
 
     # full 9-address probe from SINGLETON reps only (coincident piles
     # already know their NN is 0); build side is every rep
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probe = (
-        reps.where(F.col("_m") == 1)
-        .withColumn("_o", F.explode(offs))
-        .select(
-            F.col("_pos").alias("_pa"),
-            F.col("_rlat").alias("_lata"),
-            F.col("_rlon").alias("_lona"),
-            F.pmod(F.col("_tx") + F.col("_o.dx"), F.lit(n_tiles)).alias(
-                "_nx"
-            ),
-            (F.col("_ty") + F.col("_o.dy")).alias("_ny"),
-        )
-    )
-    build = reps.select(
-        F.col("_pos").alias("_pb"),
-        F.col("_rlat").alias("_latb"),
-        F.col("_rlon").alias("_lonb"),
-        F.col("_tx").alias("_nx"),
-        F.col("_ty").alias("_ny"),
-    )
-    dist_mm = F.round(
-        C.haversine(
-            F.col("_lata"), F.col("_lona"), F.col("_latb"), F.col("_lonb")
-        )
-        * F.lit(1000.0)
-    ).cast("long")
     nn = (
-        probe.join(build, ["_nx", "_ny"])
-        .where(F.col("_pa") != F.col("_pb"))
-        .select(F.col("_pa"), dist_mm.alias("_d"))
-        .where(F.col("_d") <= F.lit(r_mm))
-        .groupBy("_pa")
-        .agg(F.min("_d").alias("_nn"))
+        L.rep_pairs(reps.where(F.col("m") == 1), reps, zoom, L.FULL_PROBE, r_mm)
+        .groupBy("pos_a")
+        .agg(F.min("dist_mm").alias("_nn"))
     )
     nrow = nn.agg(F.count(F.lit(1)), F.sum("_nn")).first()
     n_single_in = int(nrow[0] or 0)
@@ -654,90 +520,22 @@ def variogram(
         raise ValueError("lag_edges_m must be non-empty")
     edges = sorted(float(e) for e in lag_edges_m)
     h_max = edges[-1]
-    zoom = dbscan_zoom_for_eps(h_max, max_abs_lat)
-    if zoom < 2:
-        raise ValueError(
-            f"max lag {h_max} m needs zoom {zoom} (< 2): planetary "
-            "lags degenerate to all-pairs; reduce the ladder."
-        )
-    n_tiles = 1 << zoom
+    zoom = _pair_zoom(h_max, max_abs_lat)
     e_mm = [round(e * 1000.0) for e in edges]
-
-    ula = F.round(F.col(lat_col) * F.lit(1e6)).cast("long")
-    ulo = F.round(F.col(lon_col) * F.lit(1e6)).cast("long")
-    v = F.col(value_col).cast("long")
-    keyed = points.where(
-        F.col(lat_col).isNotNull()
-        & F.col(lon_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).withColumns({"_ula": ula, "_ulo": ulo, "_v": v})
-    reps = keyed.groupBy("_ula", "_ulo", "_v").agg(
-        F.min(id_col).alias("_pos"), F.count(F.lit(1)).alias("_m")
+    reps = L.coincident_reps(
+        points, zoom, id_col, lat_col, lon_col,
+        v=F.col(value_col).cast("long"),
     )
-    rlat = F.col("_ula").cast("double") / F.lit(1e6)
-    rlon = F.col("_ulo").cast("double") / F.lit(1e6)
-    tx, ty = C.tile_xy(rlat, rlon, zoom)
-    reps = reps.select(
-        "_pos", "_m", "_v",
-        rlat.alias("_rlat"), rlon.alias("_rlon"),
-        tx.alias("_tx"), ty.alias("_ty"),
-    ).localCheckpoint()
 
     # within-rep pairs: distance 0, difference 0 — they raise N(h) of
     # bin 0 but never the numerator
-    srow = reps.agg(
-        F.sum(C.unordered_pairs(F.col("_m")))
-    ).first()
+    srow = reps.agg(F.sum(C.unordered_pairs(F.col("m")))).first()
     self_pairs = int(srow[0] or 0)
 
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(dx == 0 and dy == 0).alias("same"),
-            )
-            for dx, dy in ((0, 0), (1, 0), (1, 1), (0, 1), (-1, 1))
-        ]
-    )
-    probe = reps.withColumn("_o", F.explode(offs)).select(
-        F.col("_pos").alias("_pa"),
-        F.col("_m").alias("_ma"),
-        F.col("_v").alias("_va"),
-        F.col("_rlat").alias("_lata"),
-        F.col("_rlon").alias("_lona"),
-        F.col("_o.same").alias("_same"),
-        F.pmod(F.col("_tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("_nx"),
-        (F.col("_ty") + F.col("_o.dy")).alias("_ny"),
-    )
-    build = reps.select(
-        F.col("_pos").alias("_pb"),
-        F.col("_m").alias("_mb"),
-        F.col("_v").alias("_vb"),
-        F.col("_rlat").alias("_latb"),
-        F.col("_rlon").alias("_lonb"),
-        F.col("_tx").alias("_nx"),
-        F.col("_ty").alias("_ny"),
-    )
-    dist_mm = F.round(
-        C.haversine(
-            F.col("_lata"), F.col("_lona"), F.col("_latb"), F.col("_lonb")
-        )
-        * F.lit(1000.0)
-    ).cast("long")
-    pair_ok = F.when(F.col("_same"), F.col("_pa") < F.col("_pb")).otherwise(
-        F.col("_pa") != F.col("_pb")
-    )
-    diff = F.col("_va") - F.col("_vb")
-    cand = (
-        probe.join(build, ["_nx", "_ny"])
-        .where(pair_ok)
-        .select(
-            (F.col("_ma") * F.col("_mb")).alias("_w"),
-            (F.col("_ma") * F.col("_mb") * diff * diff).alias("_sq"),
-            dist_mm.alias("_d"),
-        )
-        .where(F.col("_d") <= F.lit(e_mm[-1]))
+    w = F.col("m_a") * F.col("m_b")
+    diff = F.col("v_a") - F.col("v_b")
+    cand = L.rep_pairs(reps, reps, zoom, L.HALF_PROBE, e_mm[-1]).select(
+        w.alias("_w"), (w * diff * diff).alias("_sq"), F.col("dist_mm").alias("_d")
     )
     lows = [-1] + e_mm[:-1]
     aggs = []
@@ -851,35 +649,18 @@ def focal_stats(
     3x3-neighborhood count of occupied neighbor cells, sum, min, max,
     range, and mean over occupied neighbors.
 
-    Same scale shape as KDE: points collapse ONCE to occupied cells,
-    the CELL relation explodes to its 9 addresses (x wrapping mod
-    2^zoom, pole-edge rows dropped), and one re-aggregation computes
-    every statistic — min/max/sum of exact BIGINTs are order-free, and
-    the mean is the single pinned division sum / n_nbrs, rounded to 6.
+    One re-aggregation of the 9-address spread of the occupied cells
+    (operators/lattice.py) computes every statistic — min/max/sum of
+    exact BIGINTs are order-free, and the mean is the single pinned
+    division sum / n_nbrs, rounded to 6.
 
     Returns one row per lattice address with >= 1 occupied neighbor:
     (tx, ty, n_nbrs, focal_sum, focal_min, focal_max, focal_range,
     focal_mean_r6).  The center cell itself counts as a neighbor when
     occupied (the standard inclusive 3x3 window)."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("cnt"),
-    )
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
     out = (
-        spread.where((F.col("ny") >= 0) & (F.col("ny") < F.lit(n_tiles)))
+        L.spread(cells, zoom, L.QUEEN, "cnt")
         .groupBy(F.col("nx").alias("tx"), F.col("ny").alias("ty"))
         .agg(
             F.count(F.lit(1)).alias("n_nbrs"),
@@ -958,83 +739,28 @@ def colocation_quotient(
     Returns one row: (n_incl, na, nb, n_censored, clq_aa_r6,
     clq_ab_r6, clq_ba_r6, clq_bb_r6); a quotient is NULL when its
     denominators vanish (empty group or n_incl < 2)."""
-    zoom = dbscan_zoom_for_eps(float(r_max_m), max_abs_lat)
-    if zoom < 2:
-        raise ValueError(
-            f"r_max {r_max_m} m needs zoom {zoom} (< 2): planetary "
-            "search radii degenerate to all-pairs; reduce r_max."
-        )
-    n_tiles = 1 << zoom
+    zoom = _pair_zoom(float(r_max_m), max_abs_lat)
     r_mm = round(float(r_max_m) * 1000.0)
-
-    ula = F.round(F.col(lat_col) * F.lit(1e6)).cast("long")
-    ulo = F.round(F.col(lon_col) * F.lit(1e6)).cast("long")
     flag = F.when(x_flag, F.lit(1)).otherwise(F.lit(0))
-    keyed = points.where(
-        F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull()
-    ).withColumns({"_ula": ula, "_ulo": ulo, "_f": flag})
-    reps = keyed.groupBy("_ula", "_ulo", "_f").agg(
-        F.min(id_col).alias("_pos"), F.count(F.lit(1)).alias("_m")
-    )
-    rlat = F.col("_ula").cast("double") / F.lit(1e6)
-    rlon = F.col("_ulo").cast("double") / F.lit(1e6)
-    tx, ty = C.tile_xy(rlat, rlon, zoom)
-    reps = reps.select(
-        "_pos", "_m", "_f",
-        rlat.alias("_rlat"), rlon.alias("_rlon"),
-        tx.alias("_tx"), ty.alias("_ty"),
-    ).localCheckpoint()
+    reps = L.coincident_reps(points, zoom, id_col, lat_col, lon_col, f=flag)
 
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probe = reps.withColumn("_o", F.explode(offs)).select(
-        F.col("_pos").alias("_pa"),
-        F.col("_m").alias("_ma"),
-        F.col("_f").alias("_fa"),
-        F.col("_rlat").alias("_lata"),
-        F.col("_rlon").alias("_lona"),
-        F.pmod(F.col("_tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("_nx"),
-        (F.col("_ty") + F.col("_o.dy")).alias("_ny"),
-    )
-    build = reps.select(
-        F.col("_pos").alias("_pb"),
-        F.col("_f").alias("_fb"),
-        F.col("_rlat").alias("_latb"),
-        F.col("_rlon").alias("_lonb"),
-        F.col("_tx").alias("_nx"),
-        F.col("_ty").alias("_ny"),
-    )
-    dist_mm = F.round(
-        C.haversine(
-            F.col("_lata"), F.col("_lona"), F.col("_latb"), F.col("_lonb")
-        )
-        * F.lit(1000.0)
-    ).cast("long")
-    cand = (
-        probe.join(build, ["_nx", "_ny"])
-        .where(F.col("_pa") != F.col("_pb"))
-        .select(
-            "_pa", "_ma", "_fa",
-            dist_mm.alias("_d"),
-            F.col("_pb").alias("_cpos"),
-            F.col("_fb").alias("_cf"),
-        )
-        .where(F.col("_d") <= F.lit(r_mm))
+    cand = L.rep_pairs(reps, reps, zoom, L.FULL_PROBE, r_mm).select(
+        F.col("pos_a").alias("_pa"),
+        F.col("m_a").alias("_ma"),
+        F.col("f_a").alias("_fa"),
+        F.col("dist_mm").alias("_d"),
+        F.col("pos_b").alias("_cpos"),
+        F.col("f_b").alias("_cf"),
     )
     # self candidates: a pile of m >= 2 contains a distance-0
     # same-group sibling for each member
-    selfc = reps.where(F.col("_m") >= 2).select(
-        F.col("_pos").alias("_pa"),
-        F.col("_m").alias("_ma"),
-        F.col("_f").alias("_fa"),
+    selfc = reps.where(F.col("m") >= 2).select(
+        F.col("pos").alias("_pa"),
+        F.col("m").alias("_ma"),
+        F.col("f").alias("_fa"),
         F.lit(0).cast("long").alias("_d"),
-        F.col("_pos").alias("_cpos"),
-        F.col("_f").alias("_cf"),
+        F.col("pos").alias("_cpos"),
+        F.col("f").alias("_cf"),
     )
     nn = (
         cand.unionByName(selfc)
@@ -1060,7 +786,7 @@ def colocation_quotient(
     na = int(crow[1] or 0)
     c_aa, c_ab, c_ba, c_bb = (int(crow[i] or 0) for i in (2, 3, 4, 5))
     nb = n_incl - na
-    trow = reps.agg(F.sum("_m")).first()
+    trow = reps.agg(F.sum("m")).first()
     n_total = int(trow[0] or 0)
     n_cens = n_total - n_incl
 
@@ -1307,17 +1033,14 @@ def stkde_cube(
     occupied (cell, bucket) bin's count spreads through a separable
     truncated space x time Gaussian.
 
-    Same exactness and scale shape as KDE: points collapse ONCE to
-    occupied cube bins (map-side combinable), the BIN relation
-    explodes by the bounded integer stencil (quantized to ppb
-    driver-side — identical literals in both engines), one
-    re-aggregation; every shuffled value is an exact BIGINT.  x wraps
-    mod 2^zoom, pole-edge rows drop, time buckets are unbounded
-    integers (no wrap).
+    Same exactness and scale shape as KDE (operators/lattice.py): the
+    occupied cube bins spread by the bounded integer stencil (quantized
+    to ppb driver-side — identical literals in both engines) and
+    re-aggregate; every shuffled value is an exact BIGINT.  Time
+    buckets are unbounded integers (no wrap).
 
     Returns one row per cube address receiving mass: (tx, ty, tb,
     src_bins, density_q, kde_r3)."""
-    n_tiles = 1 << zoom
     stencil = _stkde_stencil(
         radius_cells, sigma_cells, radius_buckets, sigma_buckets,
         weight_scale,
@@ -1327,25 +1050,17 @@ def stkde_cube(
     bins = points.groupBy(
         x.alias("tx"), y.alias("ty"), tb.alias("tb")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(dt).alias("dt"),
-                F.lit(w).alias("w"),
-            )
-            for dx, dy, dt, w in stencil
-        ]
-    )
-    spread = bins.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        (F.col("tb") + F.col("_o.dt")).alias("nb"),
-        (F.col("cnt") * F.col("_o.w")).alias("mass"),
-    )
     out = (
-        spread.where((F.col("ny") >= 0) & (F.col("ny") < F.lit(n_tiles)))
+        L.spread(
+            bins,
+            zoom,
+            [
+                {"dx": dx, "dy": dy, "dt": dt, "w": w}
+                for dx, dy, dt, w in stencil
+            ],
+            (F.col("tb") + F.col("_o.dt")).alias("nb"),
+            (F.col("cnt") * F.col("_o.w")).alias("mass"),
+        )
         .groupBy(
             F.col("nx").alias("tx"),
             F.col("ny").alias("ty"),

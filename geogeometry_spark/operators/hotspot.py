@@ -1,4 +1,5 @@
-"""Getis-Ord Gi* hot-spot statistics over WebMercator tile bins.
+"""Getis-Ord Gi* hot-spot statistics over WebMercator tile bins, and
+the global and local lattice statistics on the same bins.
 
 The reference stops at heat-map COUNTS per cell (the tile/geohash/S2/
 hex heatmap pyramid family); this adds the standard next analytics
@@ -7,22 +8,13 @@ hot or cold relative to the study area (Getis & Ord 1992, "The Analysis
 of Spatial Association by Use of Distance Statistics"), with binary
 8-neighborhood-plus-self weights on the tile lattice.
 
-Scale design: points aggregate to occupied cells (map-side combinable
-count), each occupied cell explodes to its 9 neighbor addresses
-(bounded 9x blowup of the CELL relation, not the point relation), and
-one equi-join + re-aggregation produces neighbor sums.  The global
-mean/std come from a scalar aggregate collected to the driver (3
-numbers — the house pattern for plan-time scalars, same as IVF's
-training stats; a broadcast-join form would plan a
-BroadcastNestedLoopJoin for a 1-row relation for no benefit).
-
-Study-area convention: n is the number of OCCUPIED cells and neighbor
-sums only see occupied neighbors — empty lattice cells are not imputed
-as zero observations.  This is the convention that stays meaningful at
-100 TB (the full z-lattice at zoom 16 has 4.3e9 addresses, almost all
-structurally empty ocean/void; imputing them would swamp the statistic)
-— callers wanting a bounded dense lattice can pre-generate it and union
-zero counts in.
+Scale design and the occupied-cell study-area convention live in
+operators/lattice.py: occupied cells, the neighbor spread and the
+neighbor sums every statistic here reads.  A global statistic reads all
+of its integer moments in ONE driver aggregate over the neighbor sums
+(join_counts in two: its marks need n and Σx first); a broadcast-join
+form would plan a BroadcastNestedLoopJoin for a 1-row relation for no
+benefit.
 
 Float determinism: counts and neighbor sums are BIGINTs; mean/std/z use
 only IEEE-correctly-rounded ops (+ - * / sqrt) in a pinned order, so
@@ -37,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
+from . import lattice as L
 
 __all__ = [
     "getis_ord_gi",
@@ -73,7 +66,44 @@ __all__ = [
     "median_center_oracle_sql",
 ]
 
-_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+
+def _moments(row) -> list[int]:
+    """The exact integers of one driver aggregate (NULL sums read 0)."""
+    return [int(v or 0) for v in row]
+
+
+def _gi_scalars(rel: DataFrame, c: str) -> tuple[int, float, float]:
+    """Plan-time Gi* scalars of column ``c`` over the rows of ``rel``:
+    n, mean and population std from 3 exact integer sums, combined in
+    the pinned float op order the oracle twins mirror literally."""
+    x = F.col(c)
+    n, s1, s2 = _moments(
+        rel.agg(F.count(F.lit(1)), F.sum(x), F.sum(x * x)).first()
+    )
+    xbar = s1 / n if n else 0.0
+    var = s2 / n - xbar * xbar if n else 0.0
+    # math.sqrt, not **0.5: pow(x, 0.5) is not IEEE-pinned to sqrt(x),
+    # and the oracle twin uses SQL sqrt()
+    return n, xbar, math.sqrt(var) if var > 0 else 0.0
+
+
+def _gi_z(n: int, xbar: float, sdev: float, w_n, g_sum):
+    """Gi* z of a neighborhood with ``w_n`` occupied cells summing to
+    ``g_sum``, in the pinned op order the twins mirror; NULL when
+    undefined.  The radicand clamps at 0: where two offsets land on one
+    address (zoom <= 1) ``w_n`` can exceed n, and its negative radicand
+    must give NULL, not a NaN z (Spark) or an error (DuckDB)."""
+    w = w_n.cast("double")
+    g = g_sum.cast("double")
+    n_d = F.lit(float(n))
+    num = g - F.lit(xbar) * w
+    den = F.lit(sdev) * F.sqrt(
+        F.greatest(
+            (n_d * w - w * w) / F.lit(float(n - 1) if n > 1 else 1.0),
+            F.lit(0.0),
+        )
+    )
+    return F.when(F.lit(n > 1) & F.lit(sdev > 0) & (den > 0), num / den)
 
 
 def getis_ord_gi(
@@ -89,70 +119,26 @@ def getis_ord_gi(
     their summed counts, and the Gi* z-score rounded to 3 decimals —
     NULL when it is undefined (fewer than 2 occupied cells, zero count
     variance, or the neighborhood covering the whole study area).
-    Neighbor x-addresses wrap modulo 2^zoom (antimeridian adjacency);
-    y runs off the pole edges and simply finds no occupied cell."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        # the expensive points scan runs ONCE: the stats job below and
-        # the cells/spread self-join both read the checkpointed cell
-        # relation (tiny: occupied cells only) instead of re-aggregating
-        # the full point relation per consumer
-        .localCheckpoint()
+    Neighbor x-addresses wrap modulo 2^zoom (antimeridian adjacency)."""
+    # the expensive points scan runs ONCE: the stats job below and the
+    # neighbor sums both read the checkpointed cell relation (tiny:
+    # occupied cells only) instead of re-aggregating the point relation
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col).localCheckpoint()
+    n, xbar, sdev = _gi_scalars(cells, "cnt")
+    # the neighborhood includes the cell itself, so only a cell with a
+    # NULL tile (a NULL coordinate) has deg 0: it gets no row
+    joined = L.neighbor_sums(cells, zoom, L.QUEEN, ["cnt"]).where(
+        F.col("deg") > 0
     )
-    # plan-time scalars (3 numbers): occupied-cell count, sum, sum sq
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum("cnt"),
-        F.sum(F.col("cnt") * F.col("cnt")),
-    ).first()
-    n, s1, s2 = int(stats[0]), int(stats[1] or 0), int(stats[2] or 0)
-    # pinned float op order — mirrored literally by the oracle twin
-    xbar = s1 / n if n else 0.0
-    var = s2 / n - xbar * xbar if n else 0.0
-    # math.sqrt, not **0.5: pow(x, 0.5) is not IEEE-pinned to sqrt(x),
-    # and the oracle twin uses SQL sqrt()
-    sdev = math.sqrt(var) if var > 0 else 0.0
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _OFFSETS
-        ]
-    )
-    spread = (
-        cells.withColumn("_o", F.explode(offs))
-        .select(
-            F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-            (F.col("ty") + F.col("_o.dy")).alias("ny"),
-            F.col("cnt").alias("src_cnt"),
-        )
-        .groupBy("nx", "ny")
-        .agg(
-            F.count(F.lit(1)).alias("w_n"),
-            F.sum("src_cnt").alias("g_sum"),
-        )
-    )
-    joined = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    )
-    w = F.col("w_n").cast("double")
-    g = F.col("g_sum").cast("double")
-    n_d = F.lit(float(n))
-    num = g - F.lit(xbar) * w
-    den = F.lit(sdev) * F.sqrt(
-        (n_d * w - w * w) / F.lit(float(n - 1) if n > 1 else 1.0)
-    )
-    z = F.when(F.lit(n > 1) & F.lit(sdev > 0) & (den > 0), num / den)
+    z = _gi_z(n, xbar, sdev, F.col("deg"), F.col("nsum_cnt"))
     return joined.select(
-        "tx", "ty", "cnt", "w_n", "g_sum", F.round(z, 3).alias("gi_r3")
+        "tx",
+        "ty",
+        "cnt",
+        F.col("deg").alias("w_n"),
+        F.col("nsum_cnt").alias("g_sum"),
+        F.round(z, 3).alias("gi_r3"),
     )
-
-
-_NBR_OFFSETS = [(dx, dy) for dx, dy in _OFFSETS if (dx, dy) != (0, 0)]
 
 
 def morans_i(
@@ -170,66 +156,35 @@ def morans_i(
 
     Weights are binary queen adjacency on the tile lattice (8
     neighbors, self excluded, x wrapping mod 2^zoom), restricted to
-    OCCUPIED cells — same convention and same reasoning as Gi* (the
-    z16 full lattice at 100 TB is 4.3e9 mostly-void addresses).
-
-    Scale design mirrors Gi*: points collapse to occupied cells once
-    (map-side combinable), the CELL relation explodes to its 8
-    neighbor addresses and equi-joins itself — every aggregate the
+    OCCUPIED cells (operators/lattice.py).  Every aggregate the
     statistic needs (n, Σx, Σx², S0 = #adjacent ordered pairs,
-    Σ xᵢxⱼ over pairs, Σ xᵢ over pairs, Σ degᵢ²) is an exact BIGINT,
-    so no float ever enters a shuffle; the handful of scalars combine
-    driver-side in a pinned IEEE op order that the DuckDB twin mirrors
-    literally.  Numerator cross-sum is expanded as
-    Σxᵢxⱼ − x̄Σxᵢ − x̄Σxⱼ + S0·x̄² to keep the aggregation integral.
+    Σ xᵢxⱼ over pairs, Σ xᵢ over pairs, Σ degᵢ²) is an exact BIGINT
+    sum over the neighbor sums, read in one driver aggregate; the
+    handful of scalars combine driver-side in a pinned IEEE op order
+    that the DuckDB twin mirrors literally.  Numerator cross-sum is
+    expanded as Σxᵢxⱼ − x̄Σxᵢ − x̄Σxⱼ + S0·x̄² to keep the aggregation
+    integral.
 
     Returns one row: (n_cells, s0, moran_i_r6, e_i_r6, z_r6) — NULL
     statistic when undefined (n < 2, zero variance, or no adjacent
     occupied pair).  E[I] = −1/(n−1); Var under normality:
     (n²S1 − nS2 + 3S0²) / ((n²−1)S0²) − E², with S1 = 2·S0 and
     S2 = 4·Σdegᵢ² for symmetric binary weights."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum("cnt"),
-        F.sum(F.col("cnt") * F.col("cnt")),
-    ).first()
-    n, sx, sxx = int(stats[0]), int(stats[1] or 0), int(stats[2] or 0)
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("cnt").alias("cnt_j"),
-    )
-    pairs = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    ).select("tx", "ty", F.col("cnt").alias("cnt_i"), "cnt_j")
-    prow = pairs.agg(
-        F.count(F.lit(1)),
-        F.sum(F.col("cnt_i") * F.col("cnt_j")),
-        F.sum("cnt_i"),
-    ).first()
-    s0, sp, st = int(prow[0]), int(prow[1] or 0), int(prow[2] or 0)
-    drow = (
-        pairs.groupBy("tx", "ty")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(F.sum(F.col("deg") * F.col("deg")))
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
+    c, d = F.col("cnt"), F.col("deg")
+    n, sx, sxx, s0, sp, st, sd2 = _moments(
+        L.neighbor_sums(cells, zoom, L.RING, ["cnt"])
+        .agg(
+            F.count(F.lit(1)),
+            F.sum(c),
+            F.sum(c * c),
+            F.sum(d),
+            F.sum(c * F.col("nsum_cnt")),
+            F.sum(d * c),
+            F.sum(d * d),
+        )
         .first()
     )
-    sd2 = int(drow[0] or 0)
 
     spark = points.sparkSession
     # pinned scalar op order — the oracle twin mirrors it literally
@@ -270,7 +225,7 @@ def morans_i_oracle_sql(
     like the Spark side)."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -317,10 +272,10 @@ def getis_ord_gi_oracle_sql(
     """DuckDB twin: same occupied-cell lattice, same 9-address spread,
     same pinned scalar op order (stats computed in a CTE — DuckDB's
     + - * / sqrt are IEEE-correctly-rounded like Python's, so the
-    pre-round z doubles are identical)."""
+    pre-round z doubles are identical), same radicand clamp at 0."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.QUEEN)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -336,14 +291,115 @@ def getis_ord_gi_oracle_sql(
         "FROM cells CROSS JOIN offsets GROUP BY 1, 2) "
         "SELECT tx, ty, cnt, w_n, g_sum, "
         "round(CASE WHEN n > 1 AND sdev > 0 AND "
-        "(sdev * sqrt((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
+        "(sdev * sqrt(greatest((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
         "CAST(w_n AS DOUBLE) * CAST(w_n AS DOUBLE)) / "
-        "CAST(n - 1 AS DOUBLE))) > 0 THEN "
+        "CAST(n - 1 AS DOUBLE), 0.0))) > 0 THEN "
         "(CAST(g_sum AS DOUBLE) - xbar * CAST(w_n AS DOUBLE)) / "
-        "(sdev * sqrt((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
+        "(sdev * sqrt(greatest((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
         "CAST(w_n AS DOUBLE) * CAST(w_n AS DOUBLE)) / "
-        "CAST(n - 1 AS DOUBLE))) END, 3) AS gi_r3 "
+        "CAST(n - 1 AS DOUBLE), 0.0))) END, 3) AS gi_r3 "
         "FROM cells JOIN spread ON tx = nx AND ty = ny CROSS JOIN stats"
+    )
+
+
+def _dense_cube(
+    points: DataFrame,
+    t0: int,
+    bucket_s: int,
+    T: int,
+    zoom: int,
+    ts_col: str,
+    lat_col: str,
+    lon_col: str,
+) -> DataFrame:
+    """(tx, ty, b, c): every occupied cell's point count in each of the
+    ``T`` buckets of ``bucket_s`` seconds from ``t0`` (missing buckets
+    count 0).  Fixes outside the window drop before the shuffle; the
+    series densifies by a sequence explode, not a join."""
+    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
+    b = F.expr(f"({ts_col} - {int(t0)}) div {int(bucket_s)}").cast("int")
+    return (
+        points.where(
+            (F.col(ts_col) >= F.lit(int(t0)))
+            & (F.col(ts_col) < F.lit(int(t0) + T * int(bucket_s)))
+        )
+        .select(x.alias("tx"), y.alias("ty"), b.alias("_b"))
+        .groupBy("tx", "ty", "_b")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .groupBy("tx", "ty")
+        .agg(
+            F.map_from_arrays(
+                F.collect_list("_b"), F.collect_list("_c")
+            ).alias("_m")
+        )
+        .select(
+            "tx",
+            "ty",
+            F.explode(F.sequence(F.lit(0), F.lit(T - 1))).alias("b"),
+            F.col("_m"),
+        )
+        .select(
+            "tx",
+            "ty",
+            "b",
+            F.coalesce(
+                F.col("_m")[F.col("b")], F.lit(0).cast("long")
+            ).alias("c"),
+        )
+    )
+
+
+def _mk_parts(series: DataFrame, v: str) -> tuple[DataFrame, DataFrame]:
+    """Per-cell Mann-Kendall ingredients of a (tx, ty, b, ``v``) series:
+    (tx, ty, s_stat) with S = Σ_{b<b'} sign(v' - v), exact over the
+    bucket pairs, and (tx, ty, _tie) with Σ t(t-1)(2t+5) over the
+    groups of equal ``v``."""
+    l, r = series.alias("l"), series.alias("r")
+    s = (
+        l.join(
+            r,
+            (F.col("l.tx") == F.col("r.tx"))
+            & (F.col("l.ty") == F.col("r.ty"))
+            & (F.col("l.b") < F.col("r.b")),
+        )
+        .select(
+            F.col("l.tx").alias("tx"),
+            F.col("l.ty").alias("ty"),
+            F.signum(
+                (F.col(f"r.{v}") - F.col(f"l.{v}")).cast("double")
+            ).cast("long").alias("_sgn"),
+        )
+        .groupBy("tx", "ty")
+        .agg(F.sum("_sgn").alias("s_stat"))
+    )
+    t = F.col("_t")
+    ties = (
+        series.groupBy("tx", "ty", v)
+        .agg(F.count(F.lit(1)).alias("_t"))
+        .groupBy("tx", "ty")
+        .agg(F.sum(t * (t - 1) * (2 * t + 5)).alias("_tie"))
+    )
+    return s, ties
+
+
+def _mk_z(s_stat, var18):
+    """Mann-Kendall z with the continuity correction (0 when S or the
+    variance is 0): one IEEE div/sqrt on exact integers."""
+    sd = s_stat.cast("double")
+    vr = F.sqrt(var18.cast("double") / F.lit(18.0))
+    return (
+        F.when((s_stat == 0) | (var18 == 0), F.lit(0.0))
+        .when(s_stat > 0, (sd - F.lit(1.0)) / vr)
+        .otherwise((sd + F.lit(1.0)) / vr)
+    )
+
+
+def _trend(z):
+    """The 5% two-sided normal label of a Mann-Kendall z."""
+    return (
+        F.when(z > F.lit(1.96), F.lit("increasing"))
+        .when(z < F.lit(-1.96), F.lit("decreasing"))
+        .otherwise(F.lit("none"))
     )
 
 
@@ -390,85 +446,16 @@ def mann_kendall_trend(
     before the shuffle.
     """
     T = int(n_buckets)
-    tx, ty = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    b = F.expr(f"({ts_col} - {int(t0)}) div {int(bucket_s)}").cast("int")
-    binned = (
-        points.where(
-            (F.col(ts_col) >= F.lit(int(t0)))
-            & (F.col(ts_col) < F.lit(int(t0) + T * int(bucket_s)))
-        )
-        .select(tx.alias("tx"), ty.alias("ty"), b.alias("_b"))
-        .groupBy("tx", "ty", "_b")
-        .agg(F.count(F.lit(1)).alias("_c"))
+    dense = _dense_cube(
+        points, t0, bucket_s, T, zoom, ts_col, lat_col, lon_col
     )
-    dense = (
-        binned.groupBy("tx", "ty")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("_b"), F.collect_list("_c")
-            ).alias("_m")
-        )
-        .select(
-            "tx",
-            "ty",
-            F.explode(F.sequence(F.lit(0), F.lit(T - 1))).alias("b"),
-            F.col("_m"),
-        )
-        .select(
-            "tx",
-            "ty",
-            "b",
-            F.coalesce(
-                F.col("_m")[F.col("b")], F.lit(0).cast("long")
-            ).alias("c"),
-        )
-    )
-    l, r = dense.alias("l"), dense.alias("r")
-    pairs = l.join(
-        r,
-        (F.col("l.tx") == F.col("r.tx"))
-        & (F.col("l.ty") == F.col("r.ty"))
-        & (F.col("l.b") < F.col("r.b")),
-    ).select(
-        F.col("l.tx").alias("tx"),
-        F.col("l.ty").alias("ty"),
-        F.signum(
-            (F.col("r.c") - F.col("l.c")).cast("double")
-        ).cast("long").alias("_sgn"),
-    )
-    s = pairs.groupBy("tx", "ty").agg(F.sum("_sgn").alias("s_stat"))
-    ties = (
-        dense.groupBy("tx", "ty", "c")
-        .agg(F.count(F.lit(1)).alias("_t"))
-        .groupBy("tx", "ty")
-        .agg(
-            F.sum(
-                F.col("_t")
-                * (F.col("_t") - 1)
-                * (2 * F.col("_t") + 5)
-            ).alias("_tie")
-        )
-    )
+    s, ties = _mk_parts(dense, "c")
     base = T * (T - 1) * (2 * T + 5)
     var18 = (F.lit(base) - F.col("_tie")).alias("var18")
     joined = s.join(ties, ["tx", "ty"]).select("tx", "ty", "s_stat", var18)
-    sd = F.col("s_stat").cast("double")
-    vr = F.sqrt(F.col("var18").cast("double") / F.lit(18.0))
-    z = (
-        F.when((F.col("s_stat") == 0) | (F.col("var18") == 0), F.lit(0.0))
-        .when(F.col("s_stat") > 0, (sd - F.lit(1.0)) / vr)
-        .otherwise((sd + F.lit(1.0)) / vr)
-    )
+    z = _mk_z(F.col("s_stat"), F.col("var18"))
     return joined.select(
-        "tx",
-        "ty",
-        "s_stat",
-        "var18",
-        z.alias("z"),
-        F.when(z > F.lit(1.96), F.lit("increasing"))
-        .when(z < F.lit(-1.96), F.lit("decreasing"))
-        .otherwise(F.lit("none"))
-        .alias("trend"),
+        "tx", "ty", "s_stat", "var18", z.alias("z"), _trend(z).alias("trend")
     )
 
 
@@ -572,72 +559,22 @@ def emerging_hotspots(
     Returns (tx, ty, n_z, s_stat, var18, mk_z, last_gi_r3, pattern).
     """
     T = int(n_buckets)
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    b = F.expr(f"({ts_col} - {int(t0)}) div {int(bucket_s)}").cast("int")
-    binned = (
-        points.where(
-            (F.col(ts_col) >= F.lit(int(t0)))
-            & (F.col(ts_col) < F.lit(int(t0) + T * int(bucket_s)))
-        )
-        .select(x.alias("tx"), y.alias("ty"), b.alias("_b"))
-        .groupBy("tx", "ty", "_b")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    bins = (
-        binned.groupBy("tx", "ty")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("_b"), F.collect_list("_c")
-            ).alias("_m")
-        )
-        .select(
-            "tx",
-            "ty",
-            F.explode(F.sequence(F.lit(0), F.lit(T - 1))).alias("b"),
-            F.col("_m"),
-        )
-        .select(
-            "tx",
-            "ty",
-            "b",
-            F.coalesce(
-                F.col("_m")[F.col("b")], F.lit(0).cast("long")
-            ).alias("c"),
-        )
-        # one checkpoint: the stats job, the spread, and the z join all
-        # read the (cells x T) cube instead of re-binning the points
-        .localCheckpoint()
-    )
-    stats = bins.agg(
-        F.count(F.lit(1)),
-        F.sum("c"),
-        F.sum(F.col("c") * F.col("c")),
-    ).first()
-    n, s1, s2 = int(stats[0]), int(stats[1] or 0), int(stats[2] or 0)
-    xbar = s1 / n if n else 0.0
-    var = s2 / n - xbar * xbar if n else 0.0
-    sdev = math.sqrt(var) if var > 0 else 0.0
+    # one checkpoint: the stats job, the spread, and the z join all read
+    # the (cells x T) cube instead of re-binning the points
+    bins = _dense_cube(
+        points, t0, bucket_s, T, zoom, ts_col, lat_col, lon_col
+    ).localCheckpoint()
+    n, xbar, sdev = _gi_scalars(bins, "c")
 
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(db).alias("db"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for db in (-1, 0, 1)
-        ]
-    )
     spread = (
-        bins.withColumn("_o", F.explode(offs))
-        .select(
-            F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias(
-                "nx"
-            ),
-            (F.col("ty") + F.col("_o.dy")).alias("ny"),
+        L.spread(
+            bins,
+            zoom,
+            [
+                {"dx": dx, "dy": dy, "db": db}
+                for dx, dy in L.QUEEN
+                for db in (-1, 0, 1)
+            ],
             (F.col("b") + F.col("_o.db")).alias("nb"),
             F.col("c").alias("_src"),
         )
@@ -645,16 +582,7 @@ def emerging_hotspots(
         .groupBy("nx", "ny", "nb")
         .agg(F.count(F.lit(1)).alias("w_n"), F.sum("_src").alias("g_sum"))
     )
-    w = F.col("w_n").cast("double")
-    g = F.col("g_sum").cast("double")
-    n_d = F.lit(float(n))
-    den = F.lit(sdev) * F.sqrt(
-        (n_d * w - w * w) / F.lit(float(n - 1) if n > 1 else 1.0)
-    )
-    zc = F.when(
-        F.lit(n > 1) & F.lit(sdev > 0) & (den > 0),
-        (g - F.lit(xbar) * w) / den,
-    )
+    zc = _gi_z(n, xbar, sdev, F.col("w_n"), F.col("g_sum"))
     zbins = (
         bins.join(
             spread,
@@ -669,29 +597,8 @@ def emerging_hotspots(
         # consumer
         .localCheckpoint()
     )
-    l, r = zbins.alias("l"), zbins.alias("r")
-    pairs = l.join(
-        r,
-        (F.col("l.tx") == F.col("r.tx"))
-        & (F.col("l.ty") == F.col("r.ty"))
-        & (F.col("l.b") < F.col("r.b")),
-    ).select(
-        F.col("l.tx").alias("tx"),
-        F.col("l.ty").alias("ty"),
-        F.signum(F.col("r.z") - F.col("l.z")).cast("long").alias("_sgn"),
-    )
-    s = pairs.groupBy("tx", "ty").agg(F.sum("_sgn").alias("s_stat"))
+    s, ties = _mk_parts(zbins, "z")
     nz = zbins.groupBy("tx", "ty").agg(F.count(F.lit(1)).alias("n_z"))
-    ties = (
-        zbins.groupBy("tx", "ty", "z")
-        .agg(F.count(F.lit(1)).alias("_t"))
-        .groupBy("tx", "ty")
-        .agg(
-            F.sum(
-                F.col("_t") * (F.col("_t") - 1) * (2 * F.col("_t") + 5)
-            ).alias("_tie")
-        )
-    )
     last = zbins.where(F.col("b") == T - 1).select(
         "tx", "ty", F.round("z", 3).alias("last_gi_r3")
     )
@@ -713,18 +620,7 @@ def emerging_hotspots(
             "last_gi_r3",
         )
     )
-    sd = F.col("s_stat").cast("double")
-    vr = F.sqrt(F.col("var18").cast("double") / F.lit(18.0))
-    mkz = (
-        F.when((F.col("s_stat") == 0) | (F.col("var18") == 0), F.lit(0.0))
-        .when(F.col("s_stat") > 0, (sd - F.lit(1.0)) / vr)
-        .otherwise((sd + F.lit(1.0)) / vr)
-    )
-    trend = (
-        F.when(mkz > F.lit(1.96), F.lit("increasing"))
-        .when(mkz < F.lit(-1.96), F.lit("decreasing"))
-        .otherwise(F.lit("none"))
-    )
+    mkz = _mk_z(F.col("s_stat"), F.col("var18"))
     state = (
         F.when(F.col("last_gi_r3") > F.lit(1.96), F.lit("hot"))
         .when(F.col("last_gi_r3") < F.lit(-1.96), F.lit("cold"))
@@ -738,7 +634,7 @@ def emerging_hotspots(
         "var18",
         mkz.alias("mk_z"),
         "last_gi_r3",
-        F.concat(trend, F.lit("_"), state).alias("pattern"),
+        F.concat(_trend(mkz), F.lit("_"), state).alias("pattern"),
     )
 
 
@@ -788,13 +684,13 @@ def emerging_hotspots_oracle_sql(
         f"WHERE b + db >= 0 AND b + db < {T} GROUP BY 1, 2, 3)",
         "zbins AS MATERIALIZED (SELECT tx, ty, b, z FROM ("
         "SELECT tx, ty, b, CASE WHEN n > 1 AND sdev > 0 AND "
-        "(sdev * sqrt((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
+        "(sdev * sqrt(greatest((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
         "CAST(w_n AS DOUBLE) * CAST(w_n AS DOUBLE)) / "
-        "CAST(n - 1 AS DOUBLE))) > 0 THEN "
+        "CAST(n - 1 AS DOUBLE), 0.0))) > 0 THEN "
         "(CAST(g_sum AS DOUBLE) - xbar * CAST(w_n AS DOUBLE)) / "
-        "(sdev * sqrt((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
+        "(sdev * sqrt(greatest((CAST(n AS DOUBLE) * CAST(w_n AS DOUBLE) - "
         "CAST(w_n AS DOUBLE) * CAST(w_n AS DOUBLE)) / "
-        "CAST(n - 1 AS DOUBLE))) END AS z "
+        "CAST(n - 1 AS DOUBLE), 0.0))) END AS z "
         "FROM bins JOIN spread ON tx = nx AND ty = ny AND b = nb "
         "CROSS JOIN stats) WHERE z IS NOT NULL)",
         "s AS (SELECT l.tx, l.ty, "
@@ -850,17 +746,12 @@ def quadrat_dispersion(
     (n-1)·VMR with n-1 df, and the standard normal approximation
     z = sqrt(2·chi²) - sqrt(2·(n-1) - 1).
 
-    Occupied-cell convention and scale shape are exactly Gi*/Moran's:
-    one map-side-combinable count aggregate collapses the point
-    relation, three exact BIGINT scalars (n, Σx, Σx²) collect to the
-    driver, and the statistic combines in a pinned IEEE op order the
-    twin mirrors literally.  Returns one row:
+    Three exact BIGINT scalars (n, Σx, Σx²) over the occupied cells
+    collect to the driver, and the statistic combines in a pinned IEEE
+    op order the twin mirrors literally.  Returns one row:
     (n_cells, sum_cnt, vmr_r6, chi2_r6, z_r6) — NULLs when undefined
     (n < 2 or zero mean)."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
     row = cells.agg(
         F.count(F.lit(1)),
         F.sum("cnt"),
@@ -924,16 +815,13 @@ def local_morans_i(
     answers "is this cell part of a cluster or an outlier against its
     neighborhood?".
 
-    Same lattice conventions as Gi*/Moran: binary queen weights on the
-    8-neighborhood, x wrapping mod 2^zoom, restricted to OCCUPIED
-    cells.  Scale shape identical: one map-side-combinable count
-    collapse, a 5-scalar exact-BIGINT moment aggregate to the driver
-    (n, Σx, Σx², Σx³, Σx⁴ — Σ(x-x̄)² and Σ(x-x̄)⁴ expand binomially so
-    no float enters a shuffle), an 8-address spread of the CELL
-    relation, and one equi-join; every per-row statistic is then
-    native Column math over two BIGINTs (deg, nsum) and driver
-    literals, in a pinned IEEE op order the DuckDB twin mirrors
-    literally.
+    Binary queen weights on the 8-neighborhood over OCCUPIED cells
+    (operators/lattice.py).  A 5-scalar exact-BIGINT moment aggregate
+    goes to the driver (n, Σx, Σx², Σx³, Σx⁴ — Σ(x-x̄)² and Σ(x-x̄)⁴
+    expand binomially so no float enters a shuffle); every per-row
+    statistic is then native Column math over two BIGINTs (deg, nsum)
+    and driver literals, in a pinned IEEE op order the DuckDB twin
+    mirrors literally.
 
     Per cell i with deviate zᵢ = xᵢ - x̄, m₂ = Σz²/n:
     Iᵢ = (zᵢ/m₂)·Σⱼwᵢⱼzⱼ; E[Iᵢ] = -wᵢ/(n-1) and Var[Iᵢ] under
@@ -948,23 +836,17 @@ def local_morans_i(
     variance, deg = 0, or Var ≤ 0), and the quadrant label from the
     signs of (zᵢ, lag) — sign compares on bit-identical doubles are
     exact, so the label is deterministic cross-engine."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col).localCheckpoint()
     c = F.col("cnt")
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum(c),
-        F.sum(c * c),
-        F.sum(c * c * c),
-        F.sum(c * c * c * c),
-    ).first()
-    n = int(stats[0])
-    sx, sxx, sx3, sx4 = (int(stats[k] or 0) for k in (1, 2, 3, 4))
+    n, sx, sxx, sx3, sx4 = _moments(
+        cells.agg(
+            F.count(F.lit(1)),
+            F.sum(c),
+            F.sum(c * c),
+            F.sum(c * c * c),
+            F.sum(c * c * c * c),
+        ).first()
+    )
 
     # pinned driver-side scalar combine — mirrored literally by the twin
     xbar = sx / n if n else 0.0
@@ -981,37 +863,11 @@ def local_morans_i(
     b2 = m4 / (m2 * m2) if m2 > 0 else 0.0
     defined = n > 2 and m2 > 0
 
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
-    )
-    spread = (
-        cells.withColumn("_o", F.explode(offs))
-        .select(
-            F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-            (F.col("ty") + F.col("_o.dy")).alias("ny"),
-            F.col("cnt").alias("cnt_j"),
-        )
-        .groupBy("nx", "ny")
-        .agg(F.count(F.lit(1)).alias("deg"), F.sum("cnt_j").alias("nsum"))
-    )
-    joined = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-        "left",
-    ).select(
-        "tx",
-        "ty",
-        "cnt",
-        F.coalesce(F.col("deg"), F.lit(0)).alias("deg"),
-        F.coalesce(F.col("nsum"), F.lit(0)).alias("nsum"),
-    )
+    joined = L.neighbor_sums(cells, zoom, L.RING, ["cnt"])
 
     d = F.col("deg").cast("double")
     zi = F.col("cnt").cast("double") - F.lit(xbar)
-    lag = F.col("nsum").cast("double") - d * F.lit(xbar)
+    lag = F.col("nsum_cnt").cast("double") - d * F.lit(xbar)
     # + 0.0 normalizes IEEE -0.0 (zi<0 × lag=0.0 when deg=0) to +0.0
     # so the cross-engine value hash agrees on the sign of zero
     ii = (zi / F.lit(m2)) * lag + F.lit(0.0) if m2 > 0 else F.lit(None)
@@ -1059,7 +915,7 @@ def local_morans_i_oracle_sql(
     negative-zero normalization)."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -1133,11 +989,12 @@ def gearys_c(
 
     Identical lattice conventions and scale shape as :func:`morans_i`
     (binary queen adjacency over OCCUPIED cells, x wrap mod 2^zoom):
-    one map-side-combinable collapse, 8-address spread of the cell
-    relation, one equi-join; every distributed aggregate — n, Σx, Σx²,
-    S0 = #ordered adjacent pairs, Σ(xᵢ-xⱼ)² over ordered pairs,
-    Σdegᵢ² — is an exact BIGINT, floats only in the driver-side
-    combine whose op order the DuckDB twin mirrors literally.
+    every distributed aggregate — n, Σx, Σx², S0 = #ordered adjacent
+    pairs, Σdegᵢ² and the three terms of Σ(xᵢ-xⱼ)² over ordered pairs
+    (Σdeg·x² − 2Σx·nsum + Σnsum(x²), which assumes no symmetry) — is an
+    exact BIGINT from one driver aggregate, floats only in the
+    driver-side combine whose op order the DuckDB twin mirrors
+    literally.
 
     C = ((n-1)·Σwᵢⱼ(xᵢ-xⱼ)²) / (2·S0·Σ(xᵢ-x̄)²); E[C] = 1; under
     normality Var[C] = ((2S1 + S2)(n-1) - 4S0²) / (2(n+1)S0²) with
@@ -1146,45 +1003,25 @@ def gearys_c(
     Returns one row: (n_cells, s0, gearys_c_r6, z_r6) with
     z = (C - 1)/√Var (negative ⇒ clustered) — NULLs when undefined
     (n < 2, zero variance, or no adjacent occupied pair)."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col).withColumn(
+        "cnt2", F.col("cnt") * F.col("cnt")
     )
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum("cnt"),
-        F.sum(F.col("cnt") * F.col("cnt")),
-    ).first()
-    n, sx, sxx = int(stats[0]), int(stats[1] or 0), int(stats[2] or 0)
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("cnt").alias("cnt_j"),
-    )
-    pairs = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    ).select("tx", "ty", F.col("cnt").alias("cnt_i"), "cnt_j")
-    diff = F.col("cnt_i") - F.col("cnt_j")
-    prow = pairs.agg(F.count(F.lit(1)), F.sum(diff * diff)).first()
-    s0, sq = int(prow[0]), int(prow[1] or 0)
-    drow = (
-        pairs.groupBy("tx", "ty")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(F.sum(F.col("deg") * F.col("deg")))
+    c, c2, d = F.col("cnt"), F.col("cnt2"), F.col("deg")
+    n, sx, sxx, s0, sdxx, sxn, sn2, sd2 = _moments(
+        L.neighbor_sums(cells, zoom, L.RING, ["cnt", "cnt2"])
+        .agg(
+            F.count(F.lit(1)),
+            F.sum(c),
+            F.sum(c2),
+            F.sum(d),
+            F.sum(d * c2),
+            F.sum(c * F.col("nsum_cnt")),
+            F.sum("nsum_cnt2"),
+            F.sum(d * d),
+        )
         .first()
     )
-    sd2 = int(drow[0] or 0)
+    sq = sdxx - 2 * sxn + sn2  # Σ(xᵢ-xⱼ)² over ordered pairs, exact
 
     spark = points.sparkSession
     # pinned scalar op order — the oracle twin mirrors it literally
@@ -1222,7 +1059,7 @@ def gearys_c_oracle_sql(
     integer aggregates, literally the same scalar op order."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -1276,10 +1113,11 @@ def join_counts(
     The black mark is the exact integer predicate ``cnt·n > Σx`` —
     no float ever decides a mark, so the marked lattice is
     bit-reproducible cross-engine.  Same occupied-cell queen-adjacency
-    conventions and scale shape as :func:`morans_i`; every distributed
-    aggregate (n, Σx, nb, ordered BB/WW/BW pair counts, Σdeg²) is an
-    exact BIGINT.  Unordered joins A = S0/2, D = ½Σd(d−1) =
-    (Σd²−S0)/2 are exact integer divisions of even integers.
+    conventions as :func:`morans_i`; every distributed aggregate (n,
+    Σx, nb, ordered BB/WW/BW pair counts, Σdeg²) is an exact BIGINT,
+    read in two driver aggregates (the marks need n and Σx first).
+    Unordered joins A = S0/2, D = ½Σd(d−1) = (Σd²−S0)/2 are exact
+    integer divisions of even integers.
 
     Free-sampling moments with p = nb/n, q = 1-p:
     E[BB] = A·p², Var[BB] = A·p² + 2D·p³ − (A+2D)·p⁴;
@@ -1288,53 +1126,26 @@ def join_counts(
     Returns one row: (n_cells, n_black, joins, bb, ww, bw, z_bb_r6,
     z_bw_r6) — z-scores NULL when degenerate (n < 2, no joins, all
     cells one color, or Var ≤ 0)."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
-    stats = cells.agg(F.count(F.lit(1)), F.sum("cnt")).first()
-    n, sx = int(stats[0]), int(stats[1] or 0)
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
+    n, sx = _moments(cells.agg(F.count(F.lit(1)), F.sum("cnt")).first())
     # exact integer mark: cnt > mean  <=>  cnt * n > Σx
     marked = cells.select(
         "tx",
         "ty",
         (F.col("cnt") * F.lit(n) > F.lit(sx)).cast("int").alias("blk"),
-    ).localCheckpoint()
-    nb = int(marked.agg(F.sum("blk")).first()[0] or 0)
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
     )
-    spread = marked.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("blk").alias("blk_j"),
-    )
-    pairs = marked.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    ).select("tx", "ty", F.col("blk").alias("blk_i"), "blk_j")
-    bi, bj = F.col("blk_i"), F.col("blk_j")
-    prow = pairs.agg(
-        F.count(F.lit(1)),
-        F.sum(bi * bj),
-        F.sum((1 - bi) * (1 - bj)),
-        F.sum(bi * (1 - bj) + (1 - bi) * bj),
-    ).first()
-    s0 = int(prow[0])
-    bb2, ww2, bw2 = (int(prow[k] or 0) for k in (1, 2, 3))
-    sd2 = int(
-        pairs.groupBy("tx", "ty")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(F.sum(F.col("deg") * F.col("deg")))
-        .first()[0]
-        or 0
+    b, d, nbk = F.col("blk"), F.col("deg"), F.col("nsum_blk")
+    nb, s0, bb2, ww2, bw2, sd2 = _moments(
+        L.neighbor_sums(marked, zoom, L.RING, ["blk"])
+        .agg(
+            F.sum(b),
+            F.sum(d),
+            F.sum(b * nbk),
+            F.sum((1 - b) * (d - nbk)),
+            F.sum(b * (d - nbk) + (1 - b) * nbk),
+            F.sum(d * d),
+        )
+        .first()
     )
     # symmetric adjacency: every unordered join appears twice
     a, bb, ww, bw = s0 // 2, bb2 // 2, ww2 // 2, bw2 // 2
@@ -1379,7 +1190,7 @@ def join_counts_oracle_sql(
     pair counts, and literally the same pinned scalar op order."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -1448,50 +1259,28 @@ def bivariate_morans_i(
     and its exact integer ingredients: (n_cells, s0, bi_moran_r6) —
     NULL when undefined (n < 2, no adjacent pair, zero variance in
     either variable)."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
     flag = F.when(x_flag, F.lit(1)).otherwise(F.lit(0))
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
+    cells = L.occupied_cells(
+        points, zoom, lat_col, lon_col,
+        F.sum(flag).alias("cx"),
+        F.sum(1 - flag).alias("cy"),
+    )
+    cx, cy, d, ncy = F.col("cx"), F.col("cy"), F.col("deg"), F.col("nsum_cy")
+    n, sx, sxx, sy, syy, s0, sxy, spx, spy = _moments(
+        L.neighbor_sums(cells, zoom, L.RING, ["cy"])
         .agg(
-            F.sum(flag).alias("cx"),
-            F.sum(1 - flag).alias("cy"),
+            F.count(F.lit(1)),
+            F.sum(cx),
+            F.sum(cx * cx),
+            F.sum(cy),
+            F.sum(cy * cy),
+            F.sum(d),
+            F.sum(cx * ncy),
+            F.sum(d * cx),
+            F.sum(ncy),
         )
-        .localCheckpoint()
+        .first()
     )
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum("cx"),
-        F.sum(F.col("cx") * F.col("cx")),
-        F.sum("cy"),
-        F.sum(F.col("cy") * F.col("cy")),
-    ).first()
-    n = int(stats[0])
-    sx, sxx, sy, syy = (int(stats[k] or 0) for k in (1, 2, 3, 4))
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("cy").alias("cy_j"),
-    )
-    pairs = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    ).select(F.col("cx").alias("cx_i"), "cy_j")
-    prow = pairs.agg(
-        F.count(F.lit(1)),
-        F.sum(F.col("cx_i") * F.col("cy_j")),
-        F.sum("cx_i"),
-        F.sum("cy_j"),
-    ).first()
-    s0 = int(prow[0])
-    sxy, spx, spy = (int(prow[k] or 0) for k in (1, 2, 3))
 
     # pinned scalar op order — the oracle twin mirrors it literally
     bi = None
@@ -1522,7 +1311,7 @@ def bivariate_morans_i_oracle_sql(
     """DuckDB twin of :func:`bivariate_morans_i`."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"sum(CASE WHEN {x_flag_sql} THEN 1 ELSE 0 END) AS cx, "
@@ -1575,9 +1364,9 @@ def location_quotient(
     (xᵢ·T)/(X·tᵢ), whose integer products overflow BIGINT at corpus
     scale.  Returns (tx, ty, cnt, x_cnt, lq_r6) per occupied cell —
     lq NULL when the class is globally empty."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
     flag = F.when(x_flag, F.lit(1)).otherwise(F.lit(0))
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
+    cells = L.occupied_cells(
+        points, zoom, lat_col, lon_col,
         F.count(F.lit(1)).alias("cnt"),
         F.sum(flag).alias("x_cnt"),
     )
@@ -1621,6 +1410,16 @@ def location_quotient_oracle_sql(
     )
 
 
+def _count_histogram(cells: DataFrame) -> list[tuple[int, int]]:
+    """(count, number of cells with that count) per distinct ``cnt`` of
+    ``cells``, ascending — bounded by the number of DISTINCT counts
+    (<= O(sqrt(Σ cnt))), so it collects to the driver."""
+    return sorted(
+        (int(r["cnt"]), int(r["m"]))
+        for r in cells.groupBy("cnt").agg(F.count(F.lit(1)).alias("m")).collect()
+    )
+
+
 def spatial_gini(
     points: DataFrame,
     zoom: int = 8,
@@ -1647,22 +1446,11 @@ def spatial_gini(
     (n < 2 or zero mass).
 
     Returns one row: (n_cells, sum_cnt, gini_r6)."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    hist = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("cnt")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .orderBy("cnt")
-        .collect()
-    )
-    n = sum(int(r["m"]) for r in hist)
-    s = sum(int(r["cnt"]) * int(r["m"]) for r in hist)
-    num = 0
-    cum_m = 0
-    cum_s = 0
-    for r in hist:
-        c, m = int(r["cnt"]), int(r["m"])
+    hist = _count_histogram(L.occupied_cells(points, zoom, lat_col, lon_col))
+    n = sum(m for _, m in hist)
+    s = sum(c * m for c, m in hist)
+    num = cum_m = cum_s = 0
+    for c, m in hist:
         num += m * (c * cum_m - cum_s)
         cum_m += m
         cum_s += m * c
@@ -1721,59 +1509,31 @@ def general_g(
     Same lattice machinery and exactness doctrine as
     :func:`morans_i`: every distributed aggregate (n, Σx..Σx⁴,
     S0 = ordered adjacent pairs, Σ adjacent xᵢxⱼ, Σdeg²) is an exact
-    BIGINT; the driver combine converts each ingredient to double
-    FIRST (the twin's CAST order) and evaluates the B-coefficient
-    variance formula in one pinned order.  The transcription of
-    E[G²]'s five B terms was validated against a 200k-permutation
-    Monte-Carlo on a 5x5 lattice (ratio 1.000006 — see
-    tests/test_spatial_stats.py::TestGeneralG).
+    BIGINT from one driver aggregate; the driver combine converts each
+    ingredient to double FIRST (the twin's CAST order) and evaluates
+    the B-coefficient variance formula in one pinned order.  The
+    transcription of E[G²]'s five B terms was validated against a
+    200k-permutation Monte-Carlo on a 5x5 lattice (ratio 1.000006 —
+    see tests/test_spatial_stats.py::TestGeneralG).
 
     Returns one row: (n_cells, s0, g_r9, e_g_r9, z_r6) — NULL when
     undefined (n < 4 for the randomization moments, no adjacent pair,
     or zero denominator/variance)."""
-    n_tiles = 1 << zoom
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
-    c = F.col("cnt")
-    stats = cells.agg(
-        F.count(F.lit(1)),
-        F.sum(c),
-        F.sum(c * c),
-        F.sum(c * c * c),
-        F.sum(c * c * c * c),
-    ).first()
-    n = int(stats[0])
-    m1, m2, m3, m4 = (int(stats[k] or 0) for k in (1, 2, 3, 4))
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NBR_OFFSETS
-        ]
-    )
-    spread = cells.withColumn("_o", F.explode(offs)).select(
-        F.pmod(F.col("tx") + F.col("_o.dx"), F.lit(n_tiles)).alias("nx"),
-        (F.col("ty") + F.col("_o.dy")).alias("ny"),
-        F.col("cnt").alias("cnt_j"),
-    )
-    pairs = cells.join(
-        spread,
-        (F.col("tx") == F.col("nx")) & (F.col("ty") == F.col("ny")),
-    ).select("tx", "ty", F.col("cnt").alias("cnt_i"), "cnt_j")
-    prow = pairs.agg(
-        F.count(F.lit(1)), F.sum(F.col("cnt_i") * F.col("cnt_j"))
-    ).first()
-    s0, sp = int(prow[0]), int(prow[1] or 0)
-    sd2 = int(
-        pairs.groupBy("tx", "ty")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(F.sum(F.col("deg") * F.col("deg")))
-        .first()[0]
-        or 0
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col)
+    c, d = F.col("cnt"), F.col("deg")
+    n, m1, m2, m3, m4, s0, sp, sd2 = _moments(
+        L.neighbor_sums(cells, zoom, L.RING, ["cnt"])
+        .agg(
+            F.count(F.lit(1)),
+            F.sum(c),
+            F.sum(c * c),
+            F.sum(c * c * c),
+            F.sum(c * c * c * c),
+            F.sum(d),
+            F.sum(c * F.col("nsum_cnt")),
+            F.sum(d * d),
+        )
+        .first()
     )
 
     # double-FIRST conversions (the twin's CAST order), then one
@@ -1828,7 +1588,7 @@ def general_g_oracle_sql(
     identical double-first CASTs and pinned combine."""
     n_tiles = 1 << zoom
     tx, ty = C.tile_xy_sql(lat, lon, zoom)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _NBR_OFFSETS)
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in L.RING)
     return (
         f"WITH cells AS (SELECT {tx} AS tx, {ty} AS ty, "
         f"count(*) AS cnt FROM {subq} GROUP BY 1, 2), "
@@ -1908,19 +1668,11 @@ def spatial_entropy(
     Returns one row: (n_cells, sum_cnt, entropy_r6, evenness_r6,
     theil_r6); evenness NULL when n < 2 (ln n = 0), all NULL when no
     mass."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    hist = (
-        points.groupBy(x.alias("tx"), y.alias("ty"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("cnt")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .collect()
-    )
-    n = sum(int(r["m"]) for r in hist)
-    s = sum(int(r["cnt"]) * int(r["m"]) for r in hist)
+    hist = _count_histogram(L.occupied_cells(points, zoom, lat_col, lon_col))
+    n = sum(m for _, m in hist)
+    s = sum(c * m for c, m in hist)
     t_q = 0
-    for r in hist:
-        c, m = int(r["cnt"]), int(r["m"])
+    for c, m in hist:
         # exact-integer accumulation of m * (c * ln c) in ppb units;
         # floor(x + 0.5) == DuckDB round() for the nonnegative terms
         t_q += int(math.floor(m * (c * math.log(c)) * 1e9 + 0.5))
@@ -1997,15 +1749,8 @@ def head_tail_breaks(
 
     Returns one row per occupied cell: (tx, ty, cnt, ht_class) with
     ht_class in [0, depth]; higher = deeper into the head (hotter)."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).localCheckpoint()
-    hist = [
-        (int(r["cnt"]), int(r["m"]))
-        for r in cells.groupBy("cnt").agg(F.count(F.lit(1)).alias("m"))
-        .collect()
-    ]
+    cells = L.occupied_cells(points, zoom, lat_col, lon_col).localCheckpoint()
+    hist = _count_histogram(cells)
     thresholds: list[tuple[int, int]] = []  # (S_l, N_l) per split level
     sub = hist
     for _ in range(int(max_depth)):
@@ -2118,9 +1863,9 @@ def segregation_indices(
     Returns one row: (n_cells, a_total, b_total, dissim_r6,
     interaction_r6, isolation_r6); indices NULL when either group is
     empty."""
-    x, y = C.tile_xy(F.col(lat_col), F.col(lon_col), zoom)
     flag = F.when(x_flag, F.lit(1)).otherwise(F.lit(0))
-    cells = points.groupBy(x.alias("tx"), y.alias("ty")).agg(
+    cells = L.occupied_cells(
+        points, zoom, lat_col, lon_col,
         F.sum(flag).alias("ca"),
         F.sum(1 - flag).alias("cb"),
     )

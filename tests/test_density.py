@@ -89,7 +89,7 @@ def test_kde_mass_additivity(spark):
     assert b == {k: 2 * v for k, v in a.items()}
 
 
-def test_kde_matches_duckdb_twin(spark, duck):
+def test_kde_matches_duckdb_twin(spark, duck, lattice_edge_cases):
     import pandas as pd
 
     rows = []
@@ -97,29 +97,29 @@ def test_kde_matches_duckdb_twin(spark, duck):
         rows.append(
             (
                 i,
-                i % 7,
                 ((i * 37) % 160) - 80 + 0.123,
                 ((i * 91) % 360) - 180 + 0.456,
             )
         )
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "user_id", "lat", "lon"]
-    )
-    duck.register("pts_kde", pdf)
-    got = sorted(
-        tuple(r)
-        for r in kde_grid(spark.createDataFrame(pdf), zoom=6).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in duck.sql(
-            kde_grid_oracle_sql(
-                "(SELECT lat, lon FROM pts_kde)", zoom=6
-            )
-        ).fetchall()
-    )
-    assert len(got) > 100
-    assert got == want
+    for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+        pdf = pd.DataFrame(
+            [r[:3] for r in rows], columns=["event_id", "lat", "lon"]
+        )
+        duck.register("pts_kde", pdf)
+        got = sorted(
+            tuple(r)
+            for r in kde_grid(spark.createDataFrame(pdf), zoom=zoom).collect()
+        )
+        want = sorted(
+            tuple(r)
+            for r in duck.sql(
+                kde_grid_oracle_sql(
+                    "(SELECT lat, lon FROM pts_kde)", zoom=zoom
+                )
+            ).fetchall()
+        )
+        assert got and got == want, zoom
+        assert zoom != 6 or len(got) > 100
 
 
 # ---------------------------------------------------------------- Ripley K
@@ -541,7 +541,7 @@ def test_focal_stats_two_adjacent_cells(spark):
         assert r.focal_mean_r6 == 2.5
 
 
-def test_focal_stats_matches_duckdb_twin(spark, duck):
+def test_focal_stats_matches_duckdb_twin(spark, duck, lattice_edge_cases):
     import pandas as pd
 
     from geogeometry_spark.operators.density import (
@@ -552,25 +552,29 @@ def test_focal_stats_matches_duckdb_twin(spark, duck):
     rows = [
         (
             i,
-            i % 7,
             -60.0 + ((i * 17) % 120) * 0.9,
             -170.0 + ((i * 41) % 340),
         )
         for i in range(400)
     ]
-    pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "lat", "lon"])
-    duck.register("pts_focal", pdf)
-    got = sorted(
-        tuple(r)
-        for r in focal_stats(spark.createDataFrame(pdf), zoom=6).collect()
-    )
-    want = sorted(
-        tuple(w)
-        for w in duck.sql(
-            focal_stats_oracle_sql("(SELECT lat, lon FROM pts_focal)", zoom=6)
-        ).fetchall()
-    )
-    assert got == want
+    for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+        pdf = pd.DataFrame(
+            [r[:3] for r in rows], columns=["event_id", "lat", "lon"]
+        )
+        duck.register("pts_focal", pdf)
+        got = sorted(
+            tuple(r)
+            for r in focal_stats(spark.createDataFrame(pdf), zoom=zoom).collect()
+        )
+        want = sorted(
+            tuple(w)
+            for w in duck.sql(
+                focal_stats_oracle_sql(
+                    "(SELECT lat, lon FROM pts_focal)", zoom=zoom
+                )
+            ).fetchall()
+        )
+        assert got == want, zoom
 
 
 # --------------------------------------------------------------------------

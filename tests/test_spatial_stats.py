@@ -77,26 +77,29 @@ def test_gi_degenerate_inputs(spark):
     assert [r.gi_r3 for r in out] == [None, None]
 
 
-def test_gi_matches_duckdb_twin(spark, duck):
+def test_gi_matches_duckdb_twin(spark, duck, lattice_edge_cases):
     import pandas as pd
 
     rows = [
-        (i, i % 5, ((i * 37) % 140) - 70 + 0.5, ((i * 53) % 340) - 170 + 0.5)
+        (i, ((i * 37) % 140) - 70 + 0.5, ((i * 53) % 340) - 170 + 0.5)
         for i in range(300)
     ]
-    pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "lat", "lon"])
-    duck.register("pts", pdf)
-    got = sorted(
-        tuple(r) for r in getis_ord_gi(
-            spark.createDataFrame(pdf), zoom=4
-        ).collect()
-    )
-    want = sorted(
-        tuple(r) for r in duck.sql(
-            getis_ord_gi_oracle_sql("pts", zoom=4)
-        ).fetchall()
-    )
-    assert got == want
+    for rows, zoom in [(rows, 4), *lattice_edge_cases]:
+        pdf = pd.DataFrame(
+            [r[:3] for r in rows], columns=["event_id", "lat", "lon"]
+        )
+        duck.register("pts", pdf)
+        got = sorted(
+            tuple(r) for r in getis_ord_gi(
+                spark.createDataFrame(pdf), zoom=zoom
+            ).collect()
+        )
+        want = sorted(
+            tuple(r) for r in duck.sql(
+                getis_ord_gi_oracle_sql("pts", zoom=zoom)
+            ).fetchall()
+        )
+        assert got == want, zoom
 
 
 # --------------------------------------------------------------------------
@@ -166,7 +169,7 @@ def test_morans_i_degenerate_inputs(spark):
     assert flat.s0 == 2 and flat.moran_i_r6 is None
 
 
-def test_morans_i_matches_duckdb_twin(spark, duck):
+def test_morans_i_matches_duckdb_twin(spark, duck, lattice_edge_cases):
     import pandas as pd
 
     from geogeometry_spark.operators.hotspot import (
@@ -175,14 +178,59 @@ def test_morans_i_matches_duckdb_twin(spark, duck):
     )
 
     rows = [
-        (i, i % 5, ((i * 37) % 140) - 70 + 0.5, ((i * 53) % 340) - 170 + 0.5)
+        (i, ((i * 37) % 140) - 70 + 0.5, ((i * 53) % 340) - 170 + 0.5)
         for i in range(300)
     ]
-    pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "lat", "lon"])
-    duck.register("pts", pdf)
-    got = [tuple(r) for r in morans_i(spark.createDataFrame(pdf), zoom=4).collect()]
-    want = [tuple(r) for r in duck.sql(morans_i_oracle_sql("pts", zoom=4)).fetchall()]
-    assert got == want
+    for rows, zoom in [(rows, 4), *lattice_edge_cases]:
+        pdf = pd.DataFrame(
+            [r[:3] for r in rows], columns=["event_id", "lat", "lon"]
+        )
+        duck.register("pts", pdf)
+        got = [
+            tuple(r)
+            for r in morans_i(spark.createDataFrame(pdf), zoom=zoom).collect()
+        ]
+        want = [
+            tuple(r)
+            for r in duck.sql(morans_i_oracle_sql("pts", zoom=zoom)).fetchall()
+        ]
+        assert got == want, zoom
+
+
+# Spark jobs per call, the result's collect included, on the seeded input
+# of test_global_stats_job_budget: each statistic reads all of its
+# integers in one driver aggregate over the neighbor sums (join_counts in
+# two, since its marks need n and Σx first).  Before that fusion the same
+# calls ran 12 / 12 / 12 / 8 / 15 jobs.
+GLOBAL_STATS_JOBS = {
+    "morans_i": 6,
+    "gearys_c": 6,
+    "general_g": 6,
+    "bivariate_morans_i": 7,
+    "join_counts": 9,
+}
+
+
+def test_global_stats_job_budget(spark):
+    from pyspark.sql import functions as F
+
+    from geogeometry_spark.operators import hotspot
+    from geogeometry_spark.sources.tables import synthetic_fixes
+
+    pts = synthetic_fixes(spark, 100, 30)
+    args = {"bivariate_morans_i": (F.col("user_id") % 3 == 0,)}
+    sc = spark.sparkContext
+    used = {}
+    for name in GLOBAL_STATS_JOBS:
+        group = f"job-budget-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            getattr(hotspot, name)(pts, *args.get(name, ()), zoom=8).collect()
+        finally:
+            sc.setJobGroup("", "")
+        used[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {k: v for k, v in used.items() if v > GLOBAL_STATS_JOBS[k]}
+    assert not over, (used, GLOBAL_STATS_JOBS)
 
 
 # --------------------------------------------------------------------------
@@ -695,7 +743,7 @@ class TestLocalMoransI:
             assert r["ii_r6"] is None and r["z_r6"] is None
             assert r["quad"] is None
 
-    def test_twin_parity(self, spark):
+    def test_twin_parity(self, spark, lattice_edge_cases):
         import duckdb
 
         from geogeometry_spark.operators.hotspot import (
@@ -707,19 +755,21 @@ class TestLocalMoransI:
             (i, 25.0 + ((i * 7) % 6) * 9.0, ((i * 13) % 9) * 13.0 - 70.0)
             for i in range(211)
         ]
-        got = sorted(
-            map(
-                tuple,
-                local_morans_i(self._pts(spark, rows), zoom=6).collect(),
+        for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+            rows = [r[:3] for r in rows]
+            got = sorted(
+                map(
+                    tuple,
+                    local_morans_i(self._pts(spark, rows), zoom=zoom).collect(),
+                )
             )
-        )
-        vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
-        sql = local_morans_i_oracle_sql(
-            f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
-            zoom=6,
-        )
-        exp = sorted(map(tuple, duckdb.sql(sql).fetchall()))
-        assert got == exp and len(got) > 0
+            vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
+            sql = local_morans_i_oracle_sql(
+                f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
+                zoom=zoom,
+            )
+            exp = sorted(map(tuple, duckdb.sql(sql).fetchall()))
+            assert got == exp and len(got) > 0, zoom
 
 
 class TestGearysC:
@@ -766,7 +816,7 @@ class TestGearysC:
         ).collect()[0]
         assert r["gearys_c_r6"] is None and r["z_r6"] is None
 
-    def test_twin_parity(self, spark):
+    def test_twin_parity(self, spark, lattice_edge_cases):
         import duckdb
 
         from geogeometry_spark.operators.hotspot import (
@@ -778,15 +828,19 @@ class TestGearysC:
             (i, 25.0 + ((i * 7) % 6) * 9.0, ((i * 13) % 9) * 13.0 - 70.0)
             for i in range(173)
         ]
-        got = tuple(gearys_c(self._pts(spark, rows), zoom=6).collect()[0])
-        vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
-        exp = duckdb.sql(
-            gearys_c_oracle_sql(
-                f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
-                zoom=6,
+        for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+            rows = [r[:3] for r in rows]
+            got = tuple(
+                gearys_c(self._pts(spark, rows), zoom=zoom).collect()[0]
             )
-        ).fetchall()[0]
-        assert got == exp
+            vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
+            exp = duckdb.sql(
+                gearys_c_oracle_sql(
+                    f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
+                    zoom=zoom,
+                )
+            ).fetchall()[0]
+            assert got == exp, zoom
 
 
 class TestJoinCounts:
@@ -828,7 +882,7 @@ class TestJoinCounts:
         assert r["n_black"] == 0
         assert r["z_bb_r6"] is None and r["z_bw_r6"] is None
 
-    def test_twin_parity(self, spark):
+    def test_twin_parity(self, spark, lattice_edge_cases):
         import duckdb
 
         from geogeometry_spark.operators.hotspot import (
@@ -840,15 +894,19 @@ class TestJoinCounts:
             (i, 25.0 + ((i * 7) % 6) * 9.0, ((i * 13) % 9) * 13.0 - 70.0)
             for i in range(131)
         ]
-        got = tuple(join_counts(self._pts(spark, rows), zoom=6).collect()[0])
-        vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
-        exp = duckdb.sql(
-            join_counts_oracle_sql(
-                f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
-                zoom=6,
+        for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+            rows = [r[:3] for r in rows]
+            got = tuple(
+                join_counts(self._pts(spark, rows), zoom=zoom).collect()[0]
             )
-        ).fetchall()[0]
-        assert got == exp
+            vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
+            exp = duckdb.sql(
+                join_counts_oracle_sql(
+                    f"(SELECT * FROM (VALUES {vals}) t(event_id, lat, lon))",
+                    zoom=zoom,
+                )
+            ).fetchall()[0]
+            assert got == exp, zoom
 
 
 class TestBivariateMoran:
@@ -894,7 +952,7 @@ class TestBivariateMoran:
         ).collect()[0]
         assert r["bi_moran_r6"] < 0
 
-    def test_twin_parity(self, spark):
+    def test_twin_parity(self, spark, lattice_edge_cases):
         import duckdb
         from pyspark.sql import functions as F
 
@@ -908,24 +966,25 @@ class TestBivariateMoran:
              (i * 11) % 3 == 0)
             for i in range(211)
         ]
-        df = spark.createDataFrame(
-            rows, "event_id long, lat double, lon double, is_x boolean"
-        )
-        got = tuple(
-            bivariate_morans_i(df, F.col("is_x"), zoom=6).collect()[0]
-        )
-        vals = ", ".join(
-            f"({e}, {la!r}, {lo!r}, {x})" for e, la, lo, x in rows
-        )
-        sql = bivariate_morans_i_oracle_sql(
-            "(SELECT event_id, CAST(lat AS DOUBLE) AS lat, "
-            "CAST(lon AS DOUBLE) AS lon, is_x FROM "
-            f"(VALUES {vals}) t(event_id, lat, lon, is_x))",
-            "is_x",
-            zoom=6,
-        )
-        exp = duckdb.sql(sql).fetchall()[0]
-        assert got == exp
+        for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+            df = spark.createDataFrame(
+                rows, "event_id long, lat double, lon double, is_x boolean"
+            )
+            got = tuple(
+                bivariate_morans_i(df, F.col("is_x"), zoom=zoom).collect()[0]
+            )
+            vals = ", ".join(
+                f"({e}, {la!r}, {lo!r}, {x})" for e, la, lo, x in rows
+            )
+            sql = bivariate_morans_i_oracle_sql(
+                "(SELECT event_id, CAST(lat AS DOUBLE) AS lat, "
+                "CAST(lon AS DOUBLE) AS lon, is_x FROM "
+                f"(VALUES {vals}) t(event_id, lat, lon, is_x))",
+                "is_x",
+                zoom=zoom,
+            )
+            exp = duckdb.sql(sql).fetchall()[0]
+            assert got == exp, zoom
 
 
 class TestLocationQuotient:
@@ -1228,7 +1287,7 @@ class TestGeneralG:
         assert abs(gs.mean() - e_g) < 3e-4
         assert 0.97 < var_analytic / gs.var() < 1.03
 
-    def test_twin_parity(self, spark):
+    def test_twin_parity(self, spark, lattice_edge_cases):
         import duckdb
 
         from geogeometry_spark.operators.hotspot import (
@@ -1240,17 +1299,21 @@ class TestGeneralG:
             (i, 25.0 + ((i * 7) % 6) * 9.0, ((i * 13) % 9) * 13.0 - 70.0)
             for i in range(199)
         ]
-        got = tuple(general_g(self._pts(spark, rows), zoom=6).collect()[0])
-        vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
-        exp = duckdb.sql(
-            general_g_oracle_sql(
-                "(SELECT event_id, CAST(lat AS DOUBLE) AS lat, "
-                "CAST(lon AS DOUBLE) AS lon FROM "
-                f"(VALUES {vals}) t(event_id, lat, lon))",
-                zoom=6,
+        for rows, zoom in [(rows, 6), *lattice_edge_cases]:
+            rows = [r[:3] for r in rows]
+            got = tuple(
+                general_g(self._pts(spark, rows), zoom=zoom).collect()[0]
             )
-        ).fetchall()[0]
-        assert got == exp
+            vals = ", ".join(f"({e}, {la!r}, {lo!r})" for e, la, lo in rows)
+            exp = duckdb.sql(
+                general_g_oracle_sql(
+                    "(SELECT event_id, CAST(lat AS DOUBLE) AS lat, "
+                    "CAST(lon AS DOUBLE) AS lon FROM "
+                    f"(VALUES {vals}) t(event_id, lat, lon))",
+                    zoom=zoom,
+                )
+            ).fetchall()[0]
+            assert got == exp, zoom
 
 
 class TestKnox:
